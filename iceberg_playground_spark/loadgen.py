@@ -88,14 +88,3 @@ def gen_assets(
         (F.pmod(F.xxhash64(F.lit(15), key), 2) == 0).alias("is_active"),
     )
 
-
-def rate_stream(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
-    """A15's rate limiter, engine-native: the `rate` source emits
-    exactly `rowsPerSecond` (the Go limiter's 1000 msg/s,
-    main.go:329) with monotonically increasing ids — pipe through the
-    same column generators for a live load test."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", str(rows_per_second))
-        .load()
-    )

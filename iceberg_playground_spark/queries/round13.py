@@ -211,7 +211,7 @@ def b169_rewrite_position_deletes(spark: SparkSession, sf: str) -> DataFrame:
 
     from iceberg_playground_spark.queries._util import load
     from iceberg_playground_spark.queries.lakehouse import _built
-    from iceberg_playground_spark.tables import LakeCatalog
+    from iceberg_playground_spark.tables import POS_DELETE_DDL, LakeCatalog
 
     def build(tmp: str):
         cat = LakeCatalog(spark, tmp)
@@ -242,7 +242,7 @@ def b169_rewrite_position_deletes(spark: SparkSession, sf: str) -> DataFrame:
             for d in snap["delete_files"]
             if _json.loads(d["entry"]).get("pos")
         ]
-        masked = spark.read.parquet(*pos_paths)
+        masked = spark.read.schema(POS_DELETE_DDL).parquet(*pos_paths)
         return (
             t.read(version=version)
             .agg(
@@ -763,7 +763,6 @@ def c92_graph_ann_recall(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _C93_K = 16  # coarse cells (c38/c40's md5-seed convention)
-_C93_DIM = 64
 _C93_SCALE = 1000
 
 

@@ -119,15 +119,18 @@ def _flagged_positions(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     toks = F.split(F.col("text"), " ")
-    # filter BEFORE sequence(): sequence(0, n-K) with n < K would
-    # generate a DESCENDING range, not an empty one
-    eligible = d.filter(F.size(toks) >= k).select(
+    # the size guard lives INSIDE the expression: sequence(0, n-K) with
+    # n < K is a DESCENDING range whose slice() fails, and a filter
+    # beside the projection does not stop Spark evaluating it first;
+    # a short document's NULL array explodes to no rows
+    eligible = d.select(
         "doc_id",
         F.size(toks).cast("bigint").alias("total_tokens"),
         F.expr(
+            f"CASE WHEN size(split(text, ' ')) >= {k} THEN "
             f"transform(sequence(0, size(split(text, ' ')) - {k}), "
             f"i -> md5(array_join(slice(split(text, ' '), i + 1, {k}), "
-            f"' ')))"
+            f"' '))) END"
         ).alias("dgs"),
     )
     pos = eligible.select(

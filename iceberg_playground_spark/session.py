@@ -23,8 +23,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 TABLE_NAMES = (
     "region",
     "nation",
@@ -37,9 +35,6 @@ TABLE_NAMES = (
     "documents",
     "embeddings",
 )
-
-# Small dimension tables that should always be broadcast in joins.
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
 
 
 def _iceberg_jar_present() -> bool:

@@ -38,6 +38,7 @@ decouple.rs:22-24).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -59,6 +60,15 @@ _BOUNDS_DRIVER_MAX = int(
     os.environ.get("SPARK_GRAFT_BOUNDS_DRIVER_MAX", "64")
 )
 _DELETE_DIR = "deletes"
+
+# The schema of a positional delete file: (data file URI, row index)
+# pairs, as Spark's _metadata.file_path/row_index scan columns give them.
+POS_DELETE_DDL = "__f STRING, __p BIGINT"
+
+# A directory name a file URI carries verbatim (no escaping, not a hive
+# ``col=value`` component): the read path can match it in
+# _metadata.file_path.
+_PLAIN_DIR = re.compile(r"^[A-Za-z0-9_.-]+$")
 
 
 def _make_bounds_task():
@@ -260,6 +270,7 @@ class LakeTable:
         # snapshot expiration; the read path needs it to translate
         # equality-delete key names written before a rename.
         self.renames: list[dict] = meta.get("renames", [])
+        self._ddl_memo: dict[int, str] = {}
 
     # -- named refs (Iceberg tags) ------------------------------------------
     # One FILE PER TAG under refs/, created with the same os.link CAS
@@ -461,9 +472,8 @@ class LakeTable:
             {"path": p, "seq": base + 1, "bounds": {}}
             for p in self._branch_entries(name)
         ]
-        return self._assemble(
-            self.snapshot(base)["data_files"] + entries, version=base
-        )
+        snap = self.snapshot(base)
+        return self._assemble(snap["data_files"] + entries, snap)
 
     def fast_forward(self, name: str) -> int:
         """Publish: commit every branch append onto main as ONE
@@ -861,11 +871,9 @@ class LakeTable:
         untouched even at the same sequence, and engines without the
         key columns in hand (CDC appliers) can still delete. At 100 TB
         the read-path cost is one broadcast anti-join either way."""
-        v = self.current_version()
+        snap = self.snapshot(self.current_version())
         hits = (
-            self._assemble(
-                self.snapshot(v)["data_files"], v, with_pos=True
-            )
+            self._assemble(snap["data_files"], snap, with_pos=True)
             .filter(predicate)
             .select("__f", "__p")
         )
@@ -1008,7 +1016,7 @@ class LakeTable:
             delete_dir = None
             if partial:
                 hits = (
-                    self._assemble(partial, head, with_pos=True)
+                    self._assemble(partial, snap, with_pos=True)
                     .filter(
                         (F.col(col) >= F.lit(lo))
                         & (F.col(col) <= F.lit(hi))
@@ -1710,8 +1718,14 @@ class LakeTable:
         (kept_entries, pruned_count) — the pruning decision is pure
         metadata, no file I/O."""
         v = self.current_version() if version is None else version
+        return self._prune(self.snapshot(v)["data_files"], col, lo, hi)
+
+    @staticmethod
+    def _prune(
+        data_files: list[dict], col: str, lo, hi
+    ) -> tuple[list[dict], int]:
         kept, pruned = [], 0
-        for f in self.snapshot(v)["data_files"]:
+        for f in data_files:
             per_file = f.get("bounds", {})
             if not per_file:  # no recorded stats: read the whole set
                 kept.append(dict(f))
@@ -1738,8 +1752,11 @@ class LakeTable:
         planning Iceberg performs from DataFile bounds before Spark's
         own row-group pruning sees anything); survivors still get the
         residual filter and sequence-scoped MoR deletes."""
-        kept, _ = self.plan_files(col, lo, hi, version)
-        df = self._assemble(kept, version)
+        snap = self.snapshot(
+            self.current_version() if version is None else version
+        )
+        kept, _ = self._prune(snap["data_files"], col, lo, hi)
+        df = self._assemble(kept, snap)
         return df.filter((F.col(col) >= lo) & (F.col(col) <= hi))
 
     def snapshots(self) -> DataFrame:
@@ -2057,7 +2074,8 @@ class LakeTable:
                 continue
             seq = int(d["seq"])
             pdf = (
-                self.spark.read.parquet(e["path"])
+                self.spark.read.schema(POS_DELETE_DDL)
+                .parquet(e["path"])
                 .groupBy("__f")
                 .agg(F.count("*").alias("n_positions"))
                 .select(
@@ -2452,9 +2470,11 @@ class LakeTable:
         live_paths: list[str] = []
         for f in snap["data_files"]:
             live_paths.extend(self._entry_files(f))
-        merged = self.spark.read.parquet(
-            *[m["path"] for _, m in pos_entries]
-        ).distinct()
+        merged = (
+            self.spark.read.schema(POS_DELETE_DDL)
+            .parquet(*[m["path"] for _, m in pos_entries])
+            .distinct()
+        )
         # Dangling-row prune: a (file, pos) pair whose file no live
         # entry reads can never mask anything again. The live-path set
         # is metadata-sized (one row per file), so the prune is a
@@ -2529,7 +2549,7 @@ class LakeTable:
             f for f in snap["data_files"]
             if from_version < f["seq"] <= to_version
         ]
-        return self._assemble(files, to_version)
+        return self._assemble(files, snap)
 
     def changelog(self, from_version: int, to_version: int) -> DataFrame:
         """CDC changelog scan (Iceberg's create_changelog_view): every
@@ -2643,7 +2663,7 @@ class LakeTable:
                 if removed:
                     parts.append(
                         conform(
-                            self._assemble(removed, v - 1).select(
+                            self._assemble(removed, prev_snap).select(
                                 *stamp,
                                 F.lit("delete").alias("change_type"),
                                 "*",
@@ -2657,26 +2677,29 @@ class LakeTable:
                 if d["seq"] == v
             ]
             if dels:
-                prior = self.read(version=v - 1)
-                prior_files = self.snapshot(v - 1)["data_files"]
+                prior_snap = self.snapshot(v - 1)
+                prior_files = prior_snap["data_files"]
                 for meta in dels:
-                    keys = self.spark.read.parquet(meta["path"]).distinct()
                     if meta.get("pos"):
                         # positional: recover masked rows by their
                         # (file, row-index) handles on the prior view
+                        keys = self.spark.read.schema(POS_DELETE_DDL).parquet(
+                            meta["path"]
+                        )
                         prior_pos = self._assemble(
-                            prior_files, v - 1, with_pos=True
+                            prior_files, prior_snap, with_pos=True
                         )
                         masked = (
                             prior_pos.join(
-                                F.broadcast(keys),
+                                F.broadcast(keys.distinct()),
                                 on=["__f", "__p"],
                                 how="inner",
                             ).drop("__f", "__p")
                         )
                     else:
-                        masked = prior.join(
-                            F.broadcast(keys),
+                        keys = self.spark.read.parquet(meta["path"])
+                        masked = self._assemble(prior_files, prior_snap).join(
+                            F.broadcast(keys.distinct()),
                             on=list(meta["cols"]),
                             how="inner",
                         )
@@ -2727,32 +2750,97 @@ class LakeTable:
         """Snapshot scan (B2): current HEAD, `VERSION AS OF` a number,
         `VERSION AS OF` a named tag, or `TIMESTAMP AS OF` a wall time.
 
-        MoR apply: LEFT ANTI JOIN against the union of delete-key files.
-        The delete side is orders of magnitude smaller than data (keys
-        only), so it's explicitly broadcast — at 100 TB the scan gains a
-        map-side hash filter and zero shuffles."""
+        The snapshot is resolved and parsed once, then assembled as one
+        merge-on-read plan (see ``_assemble``): one data scan per
+        written schema, one broadcast anti-join per kind of delete.
+        Building the plan launches no Spark job."""
         if sum(x is not None for x in (version, tag, as_of_ts)) > 1:
             raise ValueError("pass at most one of version/tag/as_of_ts")
         if tag is not None:
             version = self.resolve_ref(tag)
         elif as_of_ts is not None:
             version = self.version_at(as_of_ts)
-        v = self.current_version() if version is None else version
-        return self._assemble(self.snapshot(v)["data_files"], version)
+        snap = self.snapshot(
+            self.current_version() if version is None else version
+        )
+        return self._assemble(snap["data_files"], snap)
+
+    def _ddl_at(self, version: int, fallback: str) -> str:
+        """The schema snapshot ``version`` was committed under
+        (memoized: committed snapshots never change); ``fallback`` when
+        that snapshot has expired."""
+        hit = self._ddl_memo.get(version)
+        if hit is None:
+            try:
+                hit = self.snapshot(version).get("ddl", self.ddl)
+            except FileNotFoundError:
+                return fallback
+            self._ddl_memo[version] = hit
+        return hit
+
+    @staticmethod
+    def _flat_dirs(f: dict) -> set[str] | None:
+        """The directories an unpartitioned entry's files sit directly
+        in, or None when the entry needs a scan of its own: its files
+        are hive-partitioned (Spark discovers partitions under one root
+        per scan), it has no stats (its layout is unknown without a
+        listing), or a directory name is one a file URI would escape."""
+        if f.get("paths"):
+            dirs = {os.path.dirname(p) for p in f["paths"]}
+        elif f.get("bounds") and not any(os.sep in n for n in f["bounds"]):
+            dirs = {f["path"]}
+        else:
+            return None
+        if all(_PLAIN_DIR.match(os.path.basename(d)) for d in dirs):
+            return dirs
+        return None
 
     def _assemble(
         self,
         files: list[dict],
-        version: int | None = None,
+        snap: dict,
         with_pos: bool = False,
     ) -> DataFrame:
-        """MoR view of a (possibly pruned) file-entry subset.
+        """Merge-on-read view of a (possibly pruned) subset of
+        ``snap``'s data entries, read under ``snap``'s schema.
         ``with_pos=True`` keeps the physical position columns
-        (``__f`` = file path, ``__p`` = row index) on the output —
-        the handles a position delete writes."""
-        v = self.current_version() if version is None else version
-        snap = self.snapshot(v)
-        ddl = snap.get("ddl", self.ddl)  # time travel replays old schemas
+        (``__f`` = file URI, ``__p`` = row index) on the output — the
+        handles a position delete writes.
+
+        One pass, whatever the entry count (Iceberg's scan-planning
+        rule: a delete applies to data with a strictly lower sequence):
+
+        - Data: unpartitioned entries written under the same DDL share
+          ONE scan; hive-partitioned and stat-less entries keep a scan
+          each. Each scan maps its written DDL positionally onto the
+          schema being read (renames, widenings, later-added columns),
+          and the scans union.
+        - Sequences: when an equality delete applies, each row carries
+          ``__s``, its entry's sequence rounded down to the nearest
+          equality-delete sequence — every ``dseq > seq`` test is
+          unchanged by the rounding. Rows of a shared scan look it up
+          from the staged directory in ``_metadata.file_path``, through
+          a table built from the entries' paths: no listing, no job.
+        - Deletes: only those newer than the oldest entry enter the
+          plan, each delete set read once with a declared schema
+          (equality keys typed by the DDL at the delete's sequence, so
+          a key written before a widen reads narrow and casts up).
+          Equality deletes apply as one broadcast left-anti join per
+          (key set, key types) on ``keys = keys AND dseq > __s``, the
+          delete side being max(dseq) per key; plain ``=``, so a NULL
+          key masks nothing. Positional deletes apply as one broadcast
+          left-anti join on ``(__f, __p)`` with no sequence test: a
+          data file path belongs to one staged directory, hence one
+          sequence, and a position delete only names files older than
+          itself. ``_metadata`` is attached only when a delete or
+          ``with_pos`` needs it."""
+        v = snap["version"]
+        ddl = snap.get("ddl", self.ddl)
+        pos_cols = ["__f", "__p"] if with_pos else []
+        # tombstones stay materialized through assembly (equality
+        # deletes keyed on a since-dropped column still anti-join on
+        # it) and are projected out at the end
+        vis_cols = [n for n, _ in self._visible_fields(ddl)]
         if not files:
             # the empty view still carries the position handles when
             # asked (a positional delete against an empty table is a
@@ -2762,99 +2850,135 @@ class LakeTable:
                 f"{n} {t}" for n, t in self._visible_fields(ddl)
             )
             return self.spark.createDataFrame(
-                [],
-                vis_ddl + (", __f STRING, __p BIGINT" if with_pos else ""),
+                [], vis_ddl + (", " + POS_DELETE_DDL if with_pos else "")
             )
-        deletes = [
-            (d["seq"], json.loads(d["entry"])) for d in snap["delete_files"]
-        ]
-        # Sequence scoping: a delete applies only to data files with a
-        # strictly lower sequence. Each entry reads with its own
-        # basePath (so hive-partitioned layouts recover the partition
-        # columns) and anti-joins only the deletes that postdate it;
-        # everything unions. Compaction collapses back to one entry
-        # with zero deletes. Equality deletes subtract by KEY; position
-        # deletes subtract by (file, row-index) via Spark's _metadata
-        # scan columns — attached only when a positional delete (or the
-        # caller) actually needs them, so the common path pays nothing.
-        # declared column order: hive-partitioned reads append partition
-        # columns last, so project back to the schema's order
         target = self._ddl_fields(ddl)
-        # tombstones stay materialized through assembly (equality
-        # deletes keyed on a since-dropped column still anti-join on
-        # it) and are projected out at the end
-        vis_cols = [n for n, _ in self._visible_fields(ddl)]
-        parts: list[DataFrame] = []
-        for f in sorted(files, key=lambda x: x["seq"]):
-            # Read each entry with the DDL its files were WRITTEN under
-            # (stamped at commit), then map positionally onto the
-            # schema being read: same position = same column (evolution
-            # only appends or renames in place, never reorders), newer
-            # columns read NULL. Entries predating the stamp read with
-            # the target schema directly (name-based projection — the
-            # pre-rename behavior, exactly right for them).
-            entry_ddl = f.get("ddl", ddl)
-            r = self.spark.read.schema(entry_ddl).option(
-                "basePath", f["path"]
+        types = dict(target)
+        oldest = min(f["seq"] for f in files)
+        pos_paths: list[str] = []
+        eq: dict[tuple, dict[int, list[str]]] = {}
+        for d in snap["delete_files"]:
+            dseq, meta = d["seq"], json.loads(d["entry"])
+            if dseq <= oldest:
+                continue  # masks none of these entries
+            if meta.get("pos"):
+                pos_paths.append(meta["path"])
+                continue
+            orig = tuple(meta["cols"])
+            trans = tuple(self._translate_delete_cols(orig, dseq, v))
+            written = dict(self._ddl_fields(self._ddl_at(dseq, ddl)))
+            ktypes = tuple(
+                written.get(o) or types[t] for o, t in zip(orig, trans)
             )
-            paths = f.get("paths") or [f["path"]]
-            raw = r.parquet(*paths)
+            eq.setdefault((orig, trans, ktypes), {}).setdefault(
+                dseq, []
+            ).append(meta["path"])
+        eq_seqs = sorted({s for by_seq in eq.values() for s in by_seq})
+
+        def bucket(seq: int) -> int:
+            return max((s for s in eq_seqs if s <= seq), default=0)
+
+        need_pos = with_pos or bool(pos_paths)
+
+        def project(raw: DataFrame, entry_ddl: str, seq_col) -> DataFrame:
+            # same position = same column (evolution only appends or
+            # renames in place, never reorders); widened since the
+            # write: cast up; added since: NULL. Entries predating the
+            # DDL stamp read with the target schema (name projection).
             entry_fields = self._ddl_fields(entry_ddl)
             sel = []
             for i, (tn, tt) in enumerate(target):
                 if i < len(entry_fields):
                     en, et = entry_fields[i]
                     c = F.col(en)
-                    if et != tt:  # widened since this entry: cast up
-                        c = c.cast(tt)
-                    sel.append(c.alias(tn))
+                    sel.append((c if et == tt else c.cast(tt)).alias(tn))
                 else:
                     sel.append(F.lit(None).cast(tt).alias(tn))
-            eq_groups: dict[tuple, list[str]] = {}
-            pos_paths: list[str] = []
-            for dseq, meta in deletes:
-                if dseq > f["seq"]:
-                    if meta.get("pos"):
-                        pos_paths.append(meta["path"])
-                    else:
-                        orig = tuple(meta["cols"])
-                        trans = tuple(
-                            self._translate_delete_cols(
-                                meta["cols"], dseq, v
-                            )
-                        )
-                        eq_groups.setdefault((orig, trans), []).append(
-                            meta["path"]
-                        )
-            need_pos = with_pos or bool(pos_paths)
+            if eq_seqs:
+                sel.append(seq_col.alias("__s"))
             if need_pos:
-                df = raw.select(
-                    *sel,
+                sel += [
                     F.col("_metadata.file_path").alias("__f"),
                     F.col("_metadata.row_index").alias("__p"),
-                )
+                ]
+            return raw.select(*sel)
+
+        # unpartitioned entries group by written DDL; staged directory
+        # names are uuids, so a name identifies one entry's sequence
+        shared: dict[str, list[tuple[dict, set[str]]]] = {}
+        alone: list[dict] = []
+        for f in sorted(files, key=lambda x: x["seq"]):
+            dirs = self._flat_dirs(f)
+            if dirs is None:
+                alone.append(f)
             else:
-                df = raw.select(*sel)
-            if pos_paths:
-                dels = self.spark.read.parquet(*pos_paths).distinct()
-                df = df.join(
-                    F.broadcast(dels), on=["__f", "__p"], how="left_anti"
-                )
-            for (orig, trans), dpaths in eq_groups.items():
-                dels = self.spark.read.parquet(*dpaths).distinct()
-                if orig != trans:  # delete predates a rename: its key
-                    dels = dels.toDF(*trans)  # names translate forward
-                df = df.join(
-                    F.broadcast(dels), on=list(trans), how="left_anti"
-                )
-            df = df.select(
-                *vis_cols, *(["__f", "__p"] if with_pos else [])
+                shared.setdefault(f.get("ddl", ddl), []).append((f, dirs))
+        parts: list[DataFrame] = []
+        for entry_ddl, group in shared.items():
+            base = os.path.commonpath([x for _, dirs in group for x in dirs])
+            paths = [
+                p for f, _ in group for p in f.get("paths") or [f["path"]]
+            ]
+            raw = (
+                self.spark.read.schema(entry_ddl)
+                .option("basePath", base)
+                .parquet(*paths)
             )
-            parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            dir_names: dict[int, list[str]] = {}  # bucket -> dir names
+            for f, dirs in group:
+                dir_names.setdefault(bucket(f["seq"]), []).extend(
+                    os.path.basename(x) for x in dirs
+                )
+            # the bucket holding the most directories is the default
+            common = max(dir_names, key=lambda b: len(dir_names[b]))
+            seq_col = F.lit(common)
+            if len(dir_names) > 1:
+                dir_name = F.regexp_extract(
+                    F.col("_metadata.file_path"), r"([^/]+)/[^/]*$", 1
+                )
+                for b, names in dir_names.items():
+                    if b != common:
+                        seq_col = F.when(dir_name.isin(*names), b).otherwise(
+                            seq_col
+                        )
+            parts.append(project(raw, entry_ddl, seq_col))
+        for f in alone:
+            entry_ddl = f.get("ddl", ddl)
+            raw = (
+                self.spark.read.schema(entry_ddl)
+                .option("basePath", f["path"])
+                .parquet(*(f.get("paths") or [f["path"]]))
+            )
+            parts.append(project(raw, entry_ddl, F.lit(bucket(f["seq"]))))
+        df = functools.reduce(DataFrame.unionByName, parts)
+        if pos_paths:
+            dels = self.spark.read.schema(POS_DELETE_DDL).parquet(*pos_paths)
+            df = df.join(F.broadcast(dels), on=["__f", "__p"], how="left_anti")
+        for (orig, trans, ktypes), by_seq in eq.items():
+            key_ddl = ", ".join(f"{o} {t}" for o, t in zip(orig, ktypes))
+            keys = [f"__k{i}" for i in range(len(orig))]
+            dels = functools.reduce(
+                DataFrame.unionByName,
+                [
+                    self.spark.read.schema(key_ddl)
+                    .parquet(*dpaths)
+                    .select(
+                        *(
+                            F.col(o).cast(types[t]).alias(k)
+                            for o, t, k in zip(orig, trans, keys)
+                        ),
+                        F.lit(dseq).alias("__d"),
+                    )
+                    for dseq, dpaths in sorted(by_seq.items())
+                ],
+            ).groupBy(*keys).agg(F.max("__d").alias("__d"))
+            cond = functools.reduce(
+                lambda a, b: a & b,
+                [F.col(t) == F.col(k) for t, k in zip(trans, keys)],
+                F.col("__d") > F.col("__s"),
+            )
+            df = df.join(F.broadcast(dels), cond, how="left_anti")
+        return df.select(*vis_cols, *pos_cols)
 
 
 class BatchedCommitter:

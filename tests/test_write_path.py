@@ -784,11 +784,11 @@ def test_position_delete_only_listed_rows(catalog, spark):
     t2.append(spark.createDataFrame([("X", "s", 1)], DDL))
     # delete only the SECOND file's copy via a positional file built
     # from the incremental view of v2
-    v = t2.current_version()
+    snap = t2.snapshot(t2.current_version())
     hits = (
         t2._assemble(
-            [f for f in t2.snapshot(v)["data_files"] if f["seq"] == 2],
-            v,
+            [f for f in snap["data_files"] if f["seq"] == 2],
+            snap,
             with_pos=True,
         )
         .filter("name = 'X'")
@@ -1024,3 +1024,106 @@ def test_delete_range_lost_race_reclaims_residual_dir(
     assert sorted(r["name"] for r in t.read().collect()) == [
         "A", "C", "D", "E",
     ]  # only B (count 15) fell in [12,16]
+
+
+# --- one-pass merge-on-read -------------------------------------------------
+
+
+def _history(catalog, spark, name, n_appends, deletes_after):
+    """``n_appends`` one-row appends, row i = (n<i>, s, i); after the
+    i-th, each (kind, j) in ``deletes_after[i]`` deletes row j, by an
+    equality delete on name or a positional delete."""
+    t = catalog.create_table("test_ns", name, DDL, drop_if_exists=True)
+    for i in range(n_appends):
+        t.append(spark.createDataFrame([(f"n{i}", "s", i)], DDL))
+        for kind, j in deletes_after.get(i, ()):
+            if kind == "eq":
+                t.delete_where(f"name = 'n{j}'", ["name"])
+            else:
+                t.delete_where_positional(f"count = {j}")
+    return t
+
+
+def test_read_launches_no_spark_job(catalog, spark):
+    t = _history(
+        catalog, spark, "nojob", 4, {1: [("eq", 1)], 2: [("pos", 0)]}
+    )
+    sc = spark.sparkContext
+    group = "read-plan-jobs-probe"
+    sc.setJobGroup(group, "read() plan")
+    try:
+        df = t.read()
+        planned = len(sc.statusTracker().getJobIdsForGroup(group))
+        got = sorted(r["name"] for r in df.collect())
+        ran = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert planned == 0
+    assert ran > 0  # the probe does see jobs of this group
+    assert got == ["n2", "n3"]
+
+
+def _plan_shape(df) -> dict:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    return {
+        "data_scans": sum(
+            "FileScan" in ln and "size:string" in ln for ln in lines
+        ),
+        "scans": sum("FileScan" in ln for ln in lines),
+        "broadcasts": plan.count("BroadcastExchange"),
+        "anti_joins": plan.count("LeftAnti"),
+    }
+
+
+def test_plan_size_is_independent_of_entry_count(catalog, spark):
+    # three deletes (eq, pos, eq) over 2 vs 6 unpartitioned entries:
+    # one data scan either way, one broadcast per delete kind
+    two = _history(
+        catalog, spark, "shape2", 2,
+        {1: [("eq", 1), ("pos", 0), ("eq", 0)]},
+    )
+    six = _history(
+        catalog, spark, "shape6", 6,
+        {1: [("eq", 1)], 3: [("pos", 2)], 4: [("eq", 4)]},
+    )
+    assert len(six.snapshot(six.current_version())["data_files"]) == 6
+    s2, s6 = _plan_shape(two.read()), _plan_shape(six.read())
+    assert s6["data_scans"] == 1
+    assert s6["broadcasts"] == 2 and s6["anti_joins"] == 2
+    assert s2 == s6
+    assert two.read().count() == 0
+    assert sorted(r["name"] for r in six.read().collect()) == [
+        "n0", "n3", "n5"
+    ]
+
+
+def test_equality_delete_on_widened_key_still_masks(catalog, spark):
+    t = catalog.create_table("test_ns", "widen_del", "k INT, v STRING")
+    t.append(spark.createDataFrame([(1, "a"), (2, "b")], "k INT, v STRING"))
+    t.delete_where("k = 1", ["k"])  # delete file holds an int key
+    t.widen_column("k", "bigint")
+    t.append(
+        spark.createDataFrame([(1, "c"), (3, "d")], "k BIGINT, v STRING")
+    )
+    t.delete_where("k = 3", ["k"])  # ... and this one a bigint key
+    df = t.read()
+    assert dict(df.dtypes)["k"] == "bigint"
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "c"), (2, "b")]
+
+
+def test_delete_matching_nothing_reads_cleanly(catalog, spark):
+    t = _table(catalog, spark, name="nomatch")
+    t.delete_where("name = 'nobody'", ["name"])
+    t.delete_where_positional("name = 'nobody'")
+    assert sorted(tuple(r) for r in t.read().collect()) == sorted(ROWS)
+
+
+def test_null_key_is_not_masked_by_a_null_delete_key(catalog, spark):
+    # plain '=' semantics: NULL = NULL is not true, so a delete file
+    # holding a NULL key masks nothing (as an equality delete did
+    # before the one-pass read)
+    t = _table(catalog, spark, name="nullkey", rows=ROWS + [(None, "x", 1)])
+    t.delete_where("name IS NULL OR name = 'A'", ["name"])
+    got = sorted(r["count"] for r in t.read().collect())
+    assert got == [1, 10, 15, 20, 20]
