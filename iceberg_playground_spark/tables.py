@@ -70,6 +70,21 @@ POS_DELETE_DDL = "__f STRING, __p BIGINT"
 # _metadata.file_path.
 _PLAIN_DIR = re.compile(r"^[A-Za-z0-9_.-]+$")
 
+# The staged directory of the file a scanned row came from (the read
+# path's sequence lookup).
+_DIR_NAME_SQL = "regexp_extract(_metadata.file_path, '([^/]+)/[^/]*$', 1)"
+
+
+def _q(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _key_match(names: tuple[str, ...]) -> str:
+    """SQL condition matching columns ``names`` to an equality-delete
+    side's ``__k0..`` (plain ``=``: a NULL key matches nothing)."""
+    return " AND ".join(f"{_q(n)} = __k{i}" for i, n in enumerate(names))
+
 
 def _make_bounds_task():
     """Build the executor-side footer-bounds task as a NESTED function:
@@ -271,6 +286,9 @@ class LakeTable:
         # equality-delete key names written before a rename.
         self.renames: list[dict] = meta.get("renames", [])
         self._ddl_memo: dict[int, str] = {}
+        # _delete_rows' frames, and the newest version _assemble read
+        self._delete_memo: dict[tuple, DataFrame] = {}
+        self._delete_memo_v = -1
 
     # -- named refs (Iceberg tags) ------------------------------------------
     # One FILE PER TAG under refs/, created with the same os.link CAS
@@ -442,7 +460,7 @@ class LakeTable:
         d = self._branch_dir(name)
         if not os.path.isdir(d):
             raise ValueError(f"no such branch: {name}")
-        staged = self.stage_append(df)
+        staged = self.stage_append(self._conform(df))
         body = json.dumps({"path": staged})
         for _ in range(50):
             n = 1 + len(
@@ -768,28 +786,9 @@ class LakeTable:
             fields = self._ddl_fields(self.ddl)
             declared = dict(fields)
             vis = [n for n, _ in self._visible_fields(self.ddl)]
-            in_types = {
-                f.name: f.dataType.simpleString() for f in df.schema.fields
-            }
-            merged = list(fields)
-            for n, t in declared.items():
-                it = in_types.get(n)
-                if it is None or it == t:
-                    continue
-                if (t, it) in self._WIDENINGS:  # input wider: promote
-                    if n in self.partition_by:
-                        raise ValueError(
-                            f"append would widen partition column {n}; "
-                            "refused (see widen_column)"
-                        )
-                    merged = [
-                        (mn, it if mn == n else mt) for mn, mt in merged
-                    ]
-                elif (it, t) not in self._WIDENINGS:
-                    raise ValueError(
-                        f"append column {n}: input type {it} is not "
-                        f"reconcilable with declared {t}"
-                    )
+            in_cols = set(df.columns)
+            staged_types = self._reconcile(df, promote=True)
+            merged = [(n, staged_types.get(n, t)) for n, t in fields]
             new_cols = [
                 (f.name, f.dataType.simpleString())
                 for f in df.schema.fields
@@ -804,7 +803,7 @@ class LakeTable:
             sel = [
                 (
                     F.col(n).cast(mtypes[n]).alias(n)
-                    if n in in_types
+                    if n in in_cols
                     else F.lit(None).cast(mtypes[n]).alias(n)
                 )
                 for n in vis
@@ -825,9 +824,52 @@ class LakeTable:
                 self.ddl = merged_ddl
                 self._write_meta()
             return v
-        staged = self.stage_append(df)
+        staged = self.stage_append(self._conform(df))
         return self._commit(
             [staged], [], {"operation": "append", "added": 1}
+        )
+
+    def _reconcile(self, df: DataFrame, promote: bool = False) -> dict:
+        """Map each declared column that ``df`` carries under another
+        type to the type it is staged under: an input narrower by a
+        legal promotion (``_WIDENINGS``) casts up to the declared type;
+        with ``promote`` (append's merge_schema) an input wider by one
+        promotes the column to the input type. Any other mismatch
+        raises ValueError naming the column: the file would commit and
+        every later read of it would fail. Names match case-blind, as
+        the read path resolves them; the map is keyed by declared
+        name."""
+        declared = {n.lower(): (n, t) for n, t in self._ddl_fields(self.ddl)}
+        out = {}
+        for f in df.schema.fields:
+            n, t = declared.get(f.name.lower(), (None, None))
+            it = f.dataType.simpleString()
+            if t is None or it == t:
+                continue
+            if (it, t) in self._WIDENINGS:  # input narrower: cast up
+                out[n] = t
+            elif promote and (t, it) in self._WIDENINGS:
+                if n in self.partition_by:
+                    raise ValueError(
+                        f"append would widen partition column {n}; "
+                        "refused (see widen_column)"
+                    )
+                out[n] = it
+            else:
+                raise ValueError(
+                    f"append column {f.name}: input type {it} is not "
+                    f"reconcilable with declared {t}"
+                )
+        return out
+
+    def _conform(self, df: DataFrame) -> DataFrame:
+        """``df`` ready to stage under the current DDL (``_reconcile``
+        without promotion); returned as is when every type matches."""
+        casts = self._reconcile(df)
+        if not casts:
+            return df
+        return df.withColumns(
+            {n: F.col(n).cast(t) for n, t in casts.items()}
         )
 
     def delete_where(self, predicate: str, equality_cols: list[str]) -> int:
@@ -1322,6 +1364,7 @@ class LakeTable:
         makes it correct by construction: the delete (seq N) masks only
         data files with seq < N, so existing rows with matching keys
         vanish while the rows appended at seq N are untouched."""
+        df = self._conform(df)  # the delete keys too
         staged = self.stage_append(df)
         keys = df.select(*equality_cols).distinct()
         d = os.path.join(self.root, _DELETE_DIR, uuid.uuid4().hex)
@@ -1353,6 +1396,7 @@ class LakeTable:
         # whose condition is NULL does not fire) — without the
         # coalesce, ~NULL would silently drop the row from the append
         # while its key still masked, i.e. an accidental delete.
+        df = self._conform(df)  # the delete keys too
         keep = df.filter(
             ~F.coalesce(F.col(delete_col), F.lit(False))
         ).drop(delete_col)
@@ -2697,11 +2741,16 @@ class LakeTable:
                             ).drop("__f", "__p")
                         )
                     else:
-                        keys = self.spark.read.parquet(meta["path"])
+                        prior_ddl = prior_snap.get("ddl", self.ddl)
+                        trans, keys = self._eq_delete_keys(
+                            meta["cols"], v, v - 1, prior_ddl
+                        )
                         masked = self._assemble(prior_files, prior_snap).join(
-                            F.broadcast(keys.distinct()),
-                            on=list(meta["cols"]),
-                            how="inner",
+                            F.broadcast(
+                                self._delete_rows(meta["path"], v, keys)
+                            ),
+                            F.expr(_key_match(trans)),
+                            how="left_semi",
                         )
                     parts.append(
                         conform(
@@ -2752,8 +2801,10 @@ class LakeTable:
 
         The snapshot is resolved and parsed once, then assembled as one
         merge-on-read plan (see ``_assemble``): one data scan per
-        written schema, one broadcast anti-join per kind of delete.
-        Building the plan launches no Spark job."""
+        written schema, one broadcast anti-join per kind of delete,
+        whose build side is read once per table object and has no
+        max(dseq)-per-key reduction, hence no shuffle. Building the
+        plan launches no Spark job."""
         if sum(x is not None for x in (version, tag, as_of_ts)) > 1:
             raise ValueError("pass at most one of version/tag/as_of_ts")
         if tag is not None:
@@ -2795,6 +2846,57 @@ class LakeTable:
             return dirs
         return None
 
+    def _eq_delete_keys(
+        self, cols: list[str], dseq: int, version: int, ddl: str
+    ) -> tuple[tuple[str, ...], tuple[tuple[str, str, str], ...]]:
+        """An equality delete's keys as read at ``version`` under
+        ``ddl``: the rename-translated key names, and per key (name as
+        written, type as written, type as read) — a key written before
+        a widen reads narrow and casts up."""
+        trans = self._translate_delete_cols(cols, dseq, version)
+        types = dict(self._ddl_fields(ddl))
+        written = dict(self._ddl_fields(self._ddl_at(dseq, ddl)))
+        return tuple(trans), tuple(
+            (o, written.get(o) or types[t], types[t])
+            for o, t in zip(cols, trans)
+        )
+
+    def _delete_rows(
+        self,
+        path: str,
+        dseq: int,
+        keys: tuple[tuple[str, str, str], ...] | None,
+    ) -> DataFrame:
+        """One delete file as the build side of its anti-join, read with
+        a declared schema (no inference job): a positional file as
+        ``(__f, __p)``; an equality file (``keys`` from
+        ``_eq_delete_keys``) as ``__k0..`` in the read types plus
+        ``__d`` = ``dseq``. Delete files are immutable, so the frame is
+        a pure function of the arguments and is built once per table
+        object (``_assemble`` evicts files the newest snapshot read no
+        longer references)."""
+        memo_key = (path, dseq, keys)
+        hit = self._delete_memo.get(memo_key)
+        if hit is None:
+            if keys is None:
+                hit = self.spark.read.schema(POS_DELETE_DDL).parquet(path)
+            else:
+                hit = (
+                    self.spark.read.schema(
+                        ", ".join(f"{_q(o)} {wt}" for o, wt, _ in keys)
+                    )
+                    .parquet(path)
+                    .selectExpr(
+                        *(
+                            f"CAST({_q(o)} AS {rt}) AS __k{i}"
+                            for i, (o, _, rt) in enumerate(keys)
+                        ),
+                        f"{dseq} AS __d",
+                    )
+                )
+            self._delete_memo[memo_key] = hit
+        return hit
+
     def _assemble(
         self,
         files: list[dict],
@@ -2813,34 +2915,37 @@ class LakeTable:
         - Data: unpartitioned entries written under the same DDL share
           ONE scan; hive-partitioned and stat-less entries keep a scan
           each. Each scan maps its written DDL positionally onto the
-          schema being read (renames, widenings, later-added columns),
-          and the scans union.
+          schema being read (renames, widenings, later-added columns)
+          in one SQL projection, and the scans union.
         - Sequences: when an equality delete applies, each row carries
           ``__s``, its entry's sequence rounded down to the nearest
           equality-delete sequence — every ``dseq > seq`` test is
           unchanged by the rounding. Rows of a shared scan look it up
-          from the staged directory in ``_metadata.file_path``, through
-          a table built from the entries' paths: no listing, no job.
+          from the staged directory in ``_metadata.file_path`` with one
+          ``CASE WHEN dir IN (...)`` built from the entries' paths: no
+          listing, no job.
         - Deletes: only those newer than the oldest entry enter the
-          plan, each delete set read once with a declared schema
-          (equality keys typed by the DDL at the delete's sequence, so
-          a key written before a widen reads narrow and casts up).
+          plan. Each delete file's rows are built once per table object
+          (``_delete_rows``: declared schema, equality keys typed by
+          the DDL at the delete's sequence and cast to the read types).
           Equality deletes apply as one broadcast left-anti join per
-          (key set, key types) on ``keys = keys AND dseq > __s``, the
-          delete side being max(dseq) per key; plain ``=``, so a NULL
-          key masks nothing. Positional deletes apply as one broadcast
-          left-anti join on ``(__f, __p)`` with no sequence test: a
-          data file path belongs to one staged directory, hence one
-          sequence, and a position delete only names files older than
-          itself. ``_metadata`` is attached only when a delete or
-          ``with_pos`` needs it."""
+          translated key set on ``keys = keys AND __d > __s``: a row
+          goes when any newer delete matches, so the build side needs
+          no max(dseq)-per-key reduction, hence no shuffle; plain
+          ``=``, so a NULL key masks nothing. Positional deletes apply
+          as one broadcast left-anti join on ``(__f, __p)`` with no
+          sequence test: a data file path belongs to one staged
+          directory, hence one sequence, and a position delete only
+          names files older than itself. ``_metadata`` is attached only
+          when a delete or ``with_pos`` needs it."""
         v = snap["version"]
         ddl = snap.get("ddl", self.ddl)
-        pos_cols = ["__f", "__p"] if with_pos else []
         # tombstones stay materialized through assembly (equality
         # deletes keyed on a since-dropped column still anti-join on
         # it) and are projected out at the end
-        vis_cols = [n for n, _ in self._visible_fields(ddl)]
+        out_cols = [_q(n) for n, _ in self._visible_fields(ddl)]
+        if with_pos:
+            out_cols += ["__f", "__p"]
         if not files:
             # the empty view still carries the position handles when
             # asked (a positional delete against an empty table is a
@@ -2853,34 +2958,40 @@ class LakeTable:
                 [], vis_ddl + (", " + POS_DELETE_DDL if with_pos else "")
             )
         target = self._ddl_fields(ddl)
-        types = dict(target)
         oldest = min(f["seq"] for f in files)
-        pos_paths: list[str] = []
-        eq: dict[tuple, dict[int, list[str]]] = {}
+        live: set[str] = set()
+        pos_rows: list[DataFrame] = []
+        eq_rows: dict[tuple[str, ...], list[DataFrame]] = {}
+        eq_seqs: set[int] = set()
         for d in snap["delete_files"]:
             dseq, meta = d["seq"], json.loads(d["entry"])
+            live.add(meta["path"])
             if dseq <= oldest:
                 continue  # masks none of these entries
             if meta.get("pos"):
-                pos_paths.append(meta["path"])
+                pos_rows.append(self._delete_rows(meta["path"], dseq, None))
                 continue
-            orig = tuple(meta["cols"])
-            trans = tuple(self._translate_delete_cols(orig, dseq, v))
-            written = dict(self._ddl_fields(self._ddl_at(dseq, ddl)))
-            ktypes = tuple(
-                written.get(o) or types[t] for o, t in zip(orig, trans)
+            trans, keys = self._eq_delete_keys(meta["cols"], dseq, v, ddl)
+            eq_rows.setdefault(trans, []).append(
+                self._delete_rows(meta["path"], dseq, keys)
             )
-            eq.setdefault((orig, trans, ktypes), {}).setdefault(
-                dseq, []
-            ).append(meta["path"])
-        eq_seqs = sorted({s for by_seq in eq.values() for s in by_seq})
+            eq_seqs.add(dseq)
+        if v >= self._delete_memo_v:
+            # bounded by the delete files the newest snapshot read still
+            # references; an older snapshot's files rebuild on demand
+            self._delete_memo_v = v
+            self._delete_memo = {
+                k: df for k, df in self._delete_memo.items() if k[0] in live
+            }
 
         def bucket(seq: int) -> int:
             return max((s for s in eq_seqs if s <= seq), default=0)
 
-        need_pos = with_pos or bool(pos_paths)
+        need_pos = with_pos or bool(pos_rows)
 
-        def project(raw: DataFrame, entry_ddl: str, seq_col) -> DataFrame:
+        def project(
+            raw: DataFrame, entry_ddl: str, seq_sql: str
+        ) -> DataFrame:
             # same position = same column (evolution only appends or
             # renames in place, never reorders); widened since the
             # write: cast up; added since: NULL. Entries predating the
@@ -2890,18 +3001,18 @@ class LakeTable:
             for i, (tn, tt) in enumerate(target):
                 if i < len(entry_fields):
                     en, et = entry_fields[i]
-                    c = F.col(en)
-                    sel.append((c if et == tt else c.cast(tt)).alias(tn))
+                    c = _q(en) if et == tt else f"CAST({_q(en)} AS {tt})"
                 else:
-                    sel.append(F.lit(None).cast(tt).alias(tn))
+                    c = f"CAST(NULL AS {tt})"
+                sel.append(f"{c} AS {_q(tn)}")
             if eq_seqs:
-                sel.append(seq_col.alias("__s"))
+                sel.append(f"{seq_sql} AS __s")
             if need_pos:
                 sel += [
-                    F.col("_metadata.file_path").alias("__f"),
-                    F.col("_metadata.row_index").alias("__p"),
+                    "_metadata.file_path AS __f",
+                    "_metadata.row_index AS __p",
                 ]
-            return raw.select(*sel)
+            return raw.selectExpr(*sel)
 
         # unpartitioned entries group by written DDL; staged directory
         # names are uuids, so a name identifies one entry's sequence
@@ -2929,19 +3040,22 @@ class LakeTable:
                 dir_names.setdefault(bucket(f["seq"]), []).extend(
                     os.path.basename(x) for x in dirs
                 )
-            # the bucket holding the most directories is the default
+            # the bucket holding the most directories is the default;
+            # _flat_dirs admits only _PLAIN_DIR names, safe to quote
             common = max(dir_names, key=lambda b: len(dir_names[b]))
-            seq_col = F.lit(common)
-            if len(dir_names) > 1:
-                dir_name = F.regexp_extract(
-                    F.col("_metadata.file_path"), r"([^/]+)/[^/]*$", 1
-                )
-                for b, names in dir_names.items():
-                    if b != common:
-                        seq_col = F.when(dir_name.isin(*names), b).otherwise(
-                            seq_col
-                        )
-            parts.append(project(raw, entry_ddl, seq_col))
+            whens = []
+            for b, names in dir_names.items():
+                if b != common:
+                    in_list = ", ".join(f"'{n}'" for n in names)
+                    whens.append(
+                        f"WHEN {_DIR_NAME_SQL} IN ({in_list}) THEN {b}"
+                    )
+            seq_sql = (
+                f"CASE {' '.join(whens)} ELSE {common} END"
+                if whens
+                else str(common)
+            )
+            parts.append(project(raw, entry_ddl, seq_sql))
         for f in alone:
             entry_ddl = f.get("ddl", ddl)
             raw = (
@@ -2949,36 +3063,16 @@ class LakeTable:
                 .option("basePath", f["path"])
                 .parquet(*(f.get("paths") or [f["path"]]))
             )
-            parts.append(project(raw, entry_ddl, F.lit(bucket(f["seq"]))))
+            parts.append(project(raw, entry_ddl, str(bucket(f["seq"]))))
         df = functools.reduce(DataFrame.unionByName, parts)
-        if pos_paths:
-            dels = self.spark.read.schema(POS_DELETE_DDL).parquet(*pos_paths)
+        if pos_rows:
+            dels = functools.reduce(DataFrame.union, pos_rows)
             df = df.join(F.broadcast(dels), on=["__f", "__p"], how="left_anti")
-        for (orig, trans, ktypes), by_seq in eq.items():
-            key_ddl = ", ".join(f"{o} {t}" for o, t in zip(orig, ktypes))
-            keys = [f"__k{i}" for i in range(len(orig))]
-            dels = functools.reduce(
-                DataFrame.unionByName,
-                [
-                    self.spark.read.schema(key_ddl)
-                    .parquet(*dpaths)
-                    .select(
-                        *(
-                            F.col(o).cast(types[t]).alias(k)
-                            for o, t, k in zip(orig, trans, keys)
-                        ),
-                        F.lit(dseq).alias("__d"),
-                    )
-                    for dseq, dpaths in sorted(by_seq.items())
-                ],
-            ).groupBy(*keys).agg(F.max("__d").alias("__d"))
-            cond = functools.reduce(
-                lambda a, b: a & b,
-                [F.col(t) == F.col(k) for t, k in zip(trans, keys)],
-                F.col("__d") > F.col("__s"),
-            )
-            df = df.join(F.broadcast(dels), cond, how="left_anti")
-        return df.select(*vis_cols, *pos_cols)
+        for trans, rows in eq_rows.items():
+            cond = _key_match(trans) + " AND __d > __s"
+            dels = functools.reduce(DataFrame.union, rows)
+            df = df.join(F.broadcast(dels), F.expr(cond), how="left_anti")
+        return df.selectExpr(*out_cols)
 
 
 class BatchedCommitter:

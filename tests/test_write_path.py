@@ -9,6 +9,9 @@ src/bin/deletes.rs:33-42,75) — see FIXTURES.md §2.
 
 from __future__ import annotations
 
+import contextlib
+import json
+
 import pytest
 
 from iceberg_playground_spark.ingest import strict_json_decode, validate
@@ -1044,23 +1047,83 @@ def _history(catalog, spark, name, n_appends, deletes_after):
     return t
 
 
+@contextlib.contextmanager
+def _job_probe(spark, group):
+    """Run the block under job group ``group``; yields a function that
+    counts the Spark jobs the group has launched so far."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_read_launches_no_spark_job(catalog, spark):
+    # holds while the data scan lists at most 32 paths: from 33 on,
+    # Spark lists them with a parallel job
+    # (spark.sql.sources.parallelPartitionDiscovery.threshold)
     t = _history(
         catalog, spark, "nojob", 4, {1: [("eq", 1)], 2: [("pos", 0)]}
     )
-    sc = spark.sparkContext
-    group = "read-plan-jobs-probe"
-    sc.setJobGroup(group, "read() plan")
-    try:
+    with _job_probe(spark, "read-plan-jobs-probe") as jobs:
         df = t.read()
-        planned = len(sc.statusTracker().getJobIdsForGroup(group))
+        planned = jobs()
         got = sorted(r["name"] for r in df.collect())
-        ran = len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+        ran = jobs()
     assert planned == 0
     assert ran > 0  # the probe does see jobs of this group
     assert got == ["n2", "n3"]
+
+
+def test_changelog_launches_no_spark_job(catalog, spark):
+    t = _history(catalog, spark, "cljob", 2, {0: [("eq", 0)], 1: [("eq", 1)]})
+    with _job_probe(spark, "changelog-plan-jobs-probe") as jobs:
+        log = t.changelog(0, t.current_version())
+        planned = jobs()
+    assert planned == 0
+    assert sorted(
+        (r["commit_version"], r["change_type"], r["name"])
+        for r in log.collect()
+    ) == [
+        (1, "insert", "n0"),
+        (2, "delete", "n0"),
+        (3, "insert", "n1"),
+        (4, "delete", "n1"),
+    ]
+
+
+def test_delete_side_is_read_once_per_table_object(
+    catalog, spark, monkeypatch
+):
+    from pyspark.sql.readwriter import DataFrameReader
+
+    t = _history(
+        catalog, spark, "memo", 4, {1: [("eq", 1)], 2: [("pos", 0)]}
+    )
+    t.read()
+    reads = []
+    parquet = DataFrameReader.parquet
+
+    def counting(self, *paths, **kw):
+        reads.append(paths)
+        return parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    got = sorted(r["name"] for r in t.read().collect())
+    assert len(reads) == 1  # the data scan only
+    assert got == ["n2", "n3"]
+    # a delete HEAD no longer references leaves the memo
+    base = t.current_version()
+    t.delete_where("name = 'n3'", ["name"])
+    assert sorted(r["name"] for r in t.read().collect()) == ["n2"]
+    t.rollback(base)
+    assert sorted(r["name"] for r in t.read().collect()) == ["n2", "n3"]
+    live = {
+        json.loads(d["entry"])["path"]
+        for d in t.snapshot(t.current_version())["delete_files"]
+    }
+    assert {k[0] for k in t._delete_memo} == live
 
 
 def _plan_shape(df) -> dict:
@@ -1073,12 +1136,14 @@ def _plan_shape(df) -> dict:
         "scans": sum("FileScan" in ln for ln in lines),
         "broadcasts": plan.count("BroadcastExchange"),
         "anti_joins": plan.count("LeftAnti"),
+        "hash_exchanges": plan.count("Exchange hashpartitioning"),
     }
 
 
 def test_plan_size_is_independent_of_entry_count(catalog, spark):
     # three deletes (eq, pos, eq) over 2 vs 6 unpartitioned entries:
-    # one data scan either way, one broadcast per delete kind
+    # one data scan either way, one broadcast per delete kind, and no
+    # shuffle on either side
     two = _history(
         catalog, spark, "shape2", 2,
         {1: [("eq", 1), ("pos", 0), ("eq", 0)]},
@@ -1091,6 +1156,7 @@ def test_plan_size_is_independent_of_entry_count(catalog, spark):
     s2, s6 = _plan_shape(two.read()), _plan_shape(six.read())
     assert s6["data_scans"] == 1
     assert s6["broadcasts"] == 2 and s6["anti_joins"] == 2
+    assert s6["hash_exchanges"] == 0
     assert s2 == s6
     assert two.read().count() == 0
     assert sorted(r["name"] for r in six.read().collect()) == [
@@ -1127,3 +1193,53 @@ def test_null_key_is_not_masked_by_a_null_delete_key(catalog, spark):
     t.delete_where("name IS NULL OR name = 'A'", ["name"])
     got = sorted(r["count"] for r in t.read().collect())
     assert got == [1, 10, 15, 20, 20]
+
+
+@pytest.mark.parametrize(
+    "verb, k_type, k_name",
+    [
+        ("append", "BIGINT", "k"),
+        ("append", "STRING", "k"),
+        ("append", "BIGINT", "K"),  # names resolve case-blind on read
+        ("append_to_branch", "BIGINT", "k"),
+        ("upsert", "BIGINT", "k"),
+        ("merge", "BIGINT", "k"),
+    ],
+)
+def test_staging_refuses_a_type_the_table_cannot_read(
+    catalog, spark, verb, k_type, k_name
+):
+    # a wider or unrelated type under the current DDL used to commit,
+    # and every later read failed with a parquet type mismatch
+    t = catalog.create_table(
+        "test_ns", "mismatch", "id BIGINT, k INT", drop_if_exists=True
+    )
+    t.append(spark.createDataFrame([(1, 1)], "id BIGINT, k INT"))
+    t.create_branch("b")
+    head = t.current_version()
+    k = "2" if k_type == "STRING" else 2
+    bad = spark.createDataFrame([(2, k)], f"id BIGINT, {k_name} {k_type}")
+    call = {
+        "append": lambda: t.append(bad),
+        "append_to_branch": lambda: t.append_to_branch("b", bad),
+        "upsert": lambda: t.upsert(bad, ["id"]),
+        "merge": lambda: t.merge(
+            bad.selectExpr("*", "false AS gone"), ["id"], delete_col="gone"
+        ),
+    }[verb]
+    with pytest.raises(ValueError, match=f"append column {k_name}: input"):
+        call()
+    assert t.current_version() == head
+    assert [tuple(r) for r in t.read().collect()] == [(1, 1)]
+    assert [tuple(r) for r in t.read_branch("b").collect()] == [(1, 1)]
+
+
+def test_staging_casts_a_narrower_type_up(catalog, spark):
+    t = catalog.create_table("test_ns", "narrow", "id BIGINT, k BIGINT")
+    same = spark.createDataFrame([(1, 1)], "id BIGINT, k BIGINT")
+    assert t._conform(same) is same  # matching types: no projection
+    t.append(spark.createDataFrame([(2, 2)], "id BIGINT, k INT"))
+    t.upsert(spark.createDataFrame([(3, 3)], "id INT, k INT"), ["id"])
+    df = t.read()
+    assert dict(df.dtypes) == {"id": "bigint", "k": "bigint"}
+    assert sorted(tuple(r) for r in df.collect()) == [(2, 2), (3, 3)]
