@@ -578,29 +578,34 @@ def measured_seconds_ex(
     return dt, 1
 
 
-def measured_seconds(run, **kwargs) -> float:
-    """Back-compat wrapper: the recorded seconds alone."""
-    return measured_seconds_ex(run, **kwargs)[0]
+# The one stdout line must parse from the tail of output a caller of
+# bench.py captures: summary_line stays under this many characters
+# (pinned by tests/test_bench_protocol.py). Stored run records keep a
+# shorter tail still, so the full payload also goes to bench_runs/.
+CAPTURE_WINDOW = 8192
+
+
+def payload(total: float, times: dict[str, float], sf) -> dict:
+    """The parseable core of a run: metric, value, unit, queries, sf."""
+    return {
+        "metric": "headline_query_wall_time",
+        "value": round(total, 3),
+        "unit": "sec",
+        "queries": times,
+        "sf": sf,
+    }
 
 
 def summary_line(total: float, times: dict[str, float], sf) -> str:
-    """The one-line stdout contract: ONLY the driver-parseable core
-    (metric, value, unit, queries, sf). VERDICT r16 item 2: the r15
-    line, grown by per-cell run counts and the guard block, outgrew
-    the driver's output-tail capture and was truncated from the front
-    — the parse failed and the round-over-round table was lost.
-    cell_runs and guard detail belong in bench_runs/*.json (where
-    they have always been persisted), never on this line; its length
-    is bounded by a unit test."""
-    return json.dumps(
-        {
-            "metric": "headline_query_wall_time",
-            "value": round(total, 3),
-            "unit": "sec",
-            "queries": times,
-            "sf": sf,
-        }
-    )
+    """The one-line stdout contract: ``payload`` and nothing else.
+    VERDICT r16 item 2: the r15 line, grown by per-cell run counts
+    and the guard block, outgrew the output-tail capture and was
+    truncated from the front — the parse failed and the
+    round-over-round table was lost. cell_runs and guard detail
+    belong in bench_runs/*.json (where they have always been
+    persisted), never on this line; its length is bounded by
+    ``CAPTURE_WINDOW``."""
+    return json.dumps(payload(total, times, sf))
 
 
 def main() -> None:
@@ -796,15 +801,16 @@ def main() -> None:
             guard["rerun_total"] = round(total2, 3)
 
     print(summary_line(total, times, sf))
-    # Durable full record (VERDICT r11 item 4): the driver keeps only
-    # a 2000-char tail of stdout, which truncates the per-cell map on
-    # wide runs — persist the whole payload (plus a wall-clock stamp)
-    # to a tracked per-sf file so every cell + guard field survives
-    # in-repo. Best-effort: the stdout line IS the contract.
+    # Durable full record (VERDICT r11 item 4): a stored run record
+    # keeps a shorter tail of stdout than CAPTURE_WINDOW, which
+    # truncates the per-cell map on wide runs — persist the whole
+    # payload (plus a wall-clock stamp) to a tracked per-sf file so
+    # every cell + guard field survives in-repo. Best-effort: the
+    # stdout line IS the contract.
     try:
         import datetime
 
-        rec = dict(json.loads(summary_line(total, times, sf)))
+        rec = payload(total, times, sf)
         rec["cell_runs"] = cell_runs
         rec["guard"] = guard
         rec["recorded_at"] = datetime.datetime.now(

@@ -278,11 +278,13 @@ def c96_graph_index_ingest(spark: SparkSession, sf: str) -> DataFrame:
         F.col("vec_id").alias("dst")
     )
     # ONE pass over the re-trimmed adjacency computes back-edge flags
-    # (broadcast arrival-id join), kept flags (broadcast pre-batch
-    # edge join — KB-scale, |base|*M rows), and the checksum's
-    # adjacency share; out_new's share aggregates separately and adds
-    # by label. Same numbers as the former estat/kept two-pass shape
-    # (checksum is a sum, so it splits across the union's two legs).
+    # (broadcast arrival-id join: batch-sized), kept flags (join on the
+    # pre-batch edges, |base|*M rows, corpus-sized at scale: no hint,
+    # so Spark broadcasts it only under its size threshold), and the
+    # checksum's adjacency share; out_new's share aggregates separately
+    # and adds by label. Same numbers as the former estat/kept two-pass
+    # shape (checksum is a sum, so it splits across the union's two
+    # legs).
     flagged = (
         adj_new.join(
             F.broadcast(arrivals.withColumn("is_back", F.lit(1))),
@@ -290,9 +292,7 @@ def c96_graph_index_ingest(spark: SparkSession, sf: str) -> DataFrame:
             "left",
         )
         .join(
-            F.broadcast(
-                adjb.select("src", "dst").withColumn("is_kept", F.lit(1))
-            ),
+            adjb.select("src", "dst").withColumn("is_kept", F.lit(1)),
             ["src", "dst"],
             "left",
         )

@@ -136,12 +136,20 @@ _QDF_CACHE_MIN_BYTES = int(
 
 
 def _qdf_source_bytes(sf: str) -> int:
-    """On-disk size of the embeddings source (0 when unreadable —
+    """On-disk size of the embeddings source: the file's size, or the
+    sum over a directory-backed table's files (0 when unreadable —
     e.g. a non-file URI — which keeps the cache off, the safe side)."""
     from iceberg_playground_spark.session import table_path
 
+    path = table_path(sf, "embeddings")
     try:
-        return os.path.getsize(table_path(sf, "embeddings"))
+        if not os.path.isdir(path):
+            return os.path.getsize(path)
+        return sum(
+            os.path.getsize(os.path.join(root, fn))
+            for root, _, fns in os.walk(path)
+            for fn in fns
+        )
     except OSError:
         return 0
 

@@ -17,11 +17,14 @@ on plain parquet + an atomic JSON snapshot log:
   no rewrite of existing files (main.rs:79-93).
 - **equality delete (merge-on-read)** — a delete writes a small parquet
   file of key tuples, never touching data files (deletes.rs:65-92);
-  readers apply it as an ANTI JOIN, sequence-scoped the way Iceberg
-  scopes it: a delete masks only data files with a strictly lower
-  sequence number, so re-appending a deleted key makes it visible
-  again. At 100 TB the delete side is tiny → Spark broadcasts it: the
-  MoR read adds a map-side filter, no shuffle.
+  readers subtract its keys, sequence-scoped the way Iceberg scopes
+  it: a delete masks only data files with a strictly lower sequence
+  number, so re-appending a deleted key makes it visible again. A
+  small delete set (at most ``_INLINE_DELETE_MAX`` rows by its
+  footers) is read on the driver and applied as a filter inside the
+  scan's stage, as Iceberg's own readers filter rows against an
+  in-memory delete set; a larger one applies as a broadcast ANTI JOIN.
+  Either way the MoR read adds no shuffle.
 - **snapshot log / time travel** — monotonically versioned JSON entries
   committed by atomic rename; `read(version=…)` is `VERSION AS OF`.
 - **batched commits** — `BatchedCommitter` coalesces many staged file
@@ -84,6 +87,89 @@ def _key_match(names: tuple[str, ...]) -> str:
     """SQL condition matching columns ``names`` to an equality-delete
     side's ``__k0..`` (plain ``=``: a NULL key matches nothing)."""
     return " AND ".join(f"{_q(n)} = __k{i}" for i, n in enumerate(names))
+
+
+# A delete set (a read's positional deletes, or its equality deletes
+# sharing one key set) whose files' footers count at most this many
+# rows applies as one filter inside the scan's stage; a larger set
+# takes a broadcast anti-join, which costs a Spark job per set but
+# scales. Both caps sit below the crossovers of HEAD-read sweeps on a
+# 4-entry table (CHANGES.md): a set matched by IN lists (positional,
+# single-column key) crossed between 2k and 5k rows; a multi-column
+# key, whose filter holds one OR disjunct per tuple, near 64.
+_INLINE_DELETE_MAX = 1000
+_INLINE_TUPLE_MAX = 32
+
+# Key types whose SQL literal is exact (integral ones by suffix).
+_INT_SUFFIX = {"tinyint": "Y", "smallint": "S", "int": "", "bigint": "L"}
+_EXACT_LITERAL = {*_INT_SUFFIX, "boolean", "string", "date"}
+
+
+def _sql_literal(value, ddl_type: str) -> str:
+    """The exact SQL literal of ``value``, a ``ddl_type`` key (one of
+    ``_EXACT_LITERAL``; a date as days since the epoch). A string
+    escapes ``\\`` and ``'`` the way Spark's parser unescapes them by
+    default (``spark.sql.parser.escapedStringLiterals=false``)."""
+    if ddl_type in _INT_SUFFIX:
+        return f"{int(value)}{_INT_SUFFIX[ddl_type]}"
+    if ddl_type == "boolean":
+        return "true" if value else "false"
+    if ddl_type == "date":
+        return f"DATE_FROM_UNIX_DATE({int(value)})"
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _pos_masks(rows) -> list[str]:
+    """A positional delete set's ``(__f, __p)`` rows as SQL conditions,
+    one per data file, true on the rows they name."""
+    by_file: dict[str, dict[int, None]] = {}
+    for f, p in rows:
+        by_file.setdefault(f, {})[p] = None
+    return [
+        f"(__f = {_sql_literal(f, 'string')} AND __p IN ("
+        + ", ".join(_sql_literal(p, "bigint") for p in ps)
+        + "))"
+        for f, ps in by_file.items()
+    ]
+
+
+def _eq_mask(
+    names: tuple[str, ...], types: list[str], dseq: int, tuples: list
+) -> str:
+    """Equality-delete key ``tuples`` of sequence ``dseq`` as an SQL
+    condition: true on a row whose columns ``names`` (of read types
+    ``types``) equal a tuple and whose sequence (``__s``) is older.
+    Plain ``=`` per column, as the anti-join has it: a NULL data key
+    leaves the condition NULL, never true. The key test comes first,
+    so the ``AND`` skips ``__s``'s path lookup on rows it keeps."""
+    tuples = list(dict.fromkeys(tuples))
+    if len(names) == 1:
+        lits = ", ".join(_sql_literal(t[0], types[0]) for t in tuples)
+        match = f"{_q(names[0])} IN ({lits})"
+    else:
+        match = " OR ".join(
+            "("
+            + " AND ".join(
+                f"{_q(n)} = {_sql_literal(x, ty)}"
+                for n, x, ty in zip(names, t, types)
+            )
+            + ")"
+            for t in tuples
+        )
+    return f"(({match}) AND __s < {dseq})"
+
+
+def _parquet_parts(path: str) -> list[str]:
+    """The parquet files a Spark read of ``path`` sees: the file
+    itself, or a directory's files minus Spark's hidden ``_``/``.``
+    names."""
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(
+        os.path.join(path, n)
+        for n in os.listdir(path)
+        if not n.startswith(("_", "."))
+    )
 
 
 def _make_bounds_task():
@@ -286,8 +372,9 @@ class LakeTable:
         # equality-delete key names written before a rename.
         self.renames: list[dict] = meta.get("renames", [])
         self._ddl_memo: dict[int, str] = {}
-        # _delete_rows' frames, and the newest version _assemble read
-        self._delete_memo: dict[tuple, DataFrame] = {}
+        # _delete_rows' frames and _delete_tuples' rows, and the newest
+        # version _assemble read
+        self._delete_memo: dict[tuple, object] = {}
         self._delete_memo_v = -1
 
     # -- named refs (Iceberg tags) ------------------------------------------
@@ -911,8 +998,10 @@ class LakeTable:
         to every strictly-older file; a position delete pins exact
         physical rows, so identical key values appended later are
         untouched even at the same sequence, and engines without the
-        key columns in hand (CDC appliers) can still delete. At 100 TB
-        the read-path cost is one broadcast anti-join either way."""
+        key columns in hand (CDC appliers) can still delete. The read
+        path applies either kind the same way: a filter in the scan
+        while the delete set is small, a broadcast anti-join past
+        that."""
         snap = self.snapshot(self.current_version())
         hits = (
             self._assemble(snap["data_files"], snap, with_pos=True)
@@ -2801,10 +2890,10 @@ class LakeTable:
 
         The snapshot is resolved and parsed once, then assembled as one
         merge-on-read plan (see ``_assemble``): one data scan per
-        written schema, one broadcast anti-join per kind of delete,
-        whose build side is read once per table object and has no
-        max(dseq)-per-key reduction, hence no shuffle. Building the
-        plan launches no Spark job."""
+        written schema; per kind of delete, a filter inside the scan's
+        stage when the set is small (its rows read once per table
+        object on the driver), else one broadcast anti-join with no
+        shuffle. Building the plan launches no Spark job."""
         if sum(x is not None for x in (version, tag, as_of_ts)) > 1:
             raise ValueError("pass at most one of version/tag/as_of_ts")
         if tag is not None:
@@ -2897,6 +2986,77 @@ class LakeTable:
             self._delete_memo[memo_key] = hit
         return hit
 
+    def _delete_tuples(
+        self, path: str, keys: tuple[tuple[str, str, str], ...] | None
+    ) -> tuple[int, list[tuple] | None]:
+        """One delete file read on the driver with pyarrow (no Spark
+        job): its footer row count, and its rows when that count is at
+        most ``_INLINE_DELETE_MAX`` (else None, unread). A positional
+        file gives ``(__f, __p)``; an equality file gives key tuples
+        (names as ``_delete_rows`` takes them; a date as days since the
+        epoch) minus any tuple holding a NULL, which masks nothing.
+        Memoized beside ``_delete_rows``' frames, under the same
+        eviction."""
+        memo_key = (path, keys)
+        hit = self._delete_memo.get(memo_key)
+        if hit is not None:
+            return hit
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        names = ["__f", "__p"] if keys is None else [o for o, _, _ in keys]
+        count, rows = 0, []
+        for part in _parquet_parts(path):
+            pf = pq.ParquetFile(part)
+            count += pf.metadata.num_rows
+            if count > _INLINE_DELETE_MAX or not pf.metadata.num_rows:
+                continue
+            cols = [
+                (c.cast(pa.int32()) if pa.types.is_date32(c.type) else c)
+                .to_pylist()
+                for c in pf.read(columns=names).columns
+            ]
+            rows += [t for t in zip(*cols) if None not in t]
+        hit = (count, rows if count <= _INLINE_DELETE_MAX else None)
+        self._delete_memo[memo_key] = hit
+        return hit
+
+    def _inline(
+        self, files: list[tuple[str, int, tuple | None]]
+    ) -> list[list[tuple]] | None:
+        """Each file's rows (``_delete_tuples``) when the delete set
+        ``files`` — (path, sequence, keys) — applies as an in-scan
+        filter: every key type, as written and as read, has an exact
+        SQL literal (an integral key may have widened), and the footer
+        counts sum to at most ``_INLINE_DELETE_MAX``
+        (``_INLINE_TUPLE_MAX`` for a multi-column key). None: the set
+        takes the broadcast anti-join."""
+        for _, _, keys in files:
+            for _, wt, rt in keys or ():
+                if rt not in _EXACT_LITERAL or not (
+                    wt == rt or {wt, rt} <= _INT_SUFFIX.keys()
+                ):
+                    return None
+        cap = (
+            _INLINE_TUPLE_MAX if len(files[0][2] or ()) > 1
+            else _INLINE_DELETE_MAX
+        )
+        total, rows = 0, []
+        for p, _, keys in files:  # stops at the cap: a bounded read
+            n, r = self._delete_tuples(p, keys)
+            total += n
+            if total > cap:
+                return None
+            rows.append(r)
+        if any(
+            isinstance(x, str) and ("\\" in x or "'" in x)
+            for r in rows for t in r for x in t
+        ) and self.spark.conf.get(
+            "spark.sql.parser.escapedStringLiterals", "false"
+        ).lower() == "true":
+            return None  # the session would not unescape the literal
+        return rows
+
     def _assemble(
         self,
         files: list[dict],
@@ -2925,19 +3085,31 @@ class LakeTable:
           ``CASE WHEN dir IN (...)`` built from the entries' paths: no
           listing, no job.
         - Deletes: only those newer than the oldest entry enter the
-          plan. Each delete file's rows are built once per table object
-          (``_delete_rows``: declared schema, equality keys typed by
-          the DDL at the delete's sequence and cast to the read types).
-          Equality deletes apply as one broadcast left-anti join per
-          translated key set on ``keys = keys AND __d > __s``: a row
-          goes when any newer delete matches, so the build side needs
-          no max(dseq)-per-key reduction, hence no shuffle; plain
-          ``=``, so a NULL key masks nothing. Positional deletes apply
-          as one broadcast left-anti join on ``(__f, __p)`` with no
-          sequence test: a data file path belongs to one staged
-          directory, hence one sequence, and a position delete only
-          names files older than itself. ``_metadata`` is attached only
-          when a delete or ``with_pos`` needs it."""
+          plan, as sets: all positional deletes, and the equality
+          deletes of each translated key set. A set applies in one of
+          two forms (``_inline`` decides):
+          - small (at most ``_INLINE_DELETE_MAX`` rows by the files'
+            footers, ``_INLINE_TUPLE_MAX`` for a multi-column key) with
+            key types whose SQL literal is exact: its rows are read on
+            the driver once per table object (``_delete_tuples``) and
+            become part of ONE filter in the scan's stage, ``NOT
+            coalesce(<mask> OR ..., false)``, with no join or exchange.
+            A positional mask per data file is ``__f = <uri> AND __p IN
+            (...)``; an equality mask per delete sequence is ``<keys
+            match> AND __s < dseq``;
+          - otherwise: one broadcast left-anti join, whose build side
+            is read once per table object (``_delete_rows``: declared
+            schema), on ``keys = keys AND __d > __s`` for equality
+            deletes and on ``(__f, __p)`` for positional ones.
+          Both forms keep the same rules. A row goes when any newer
+          delete matches, so neither needs a max(dseq)-per-key
+          reduction, hence no shuffle. Keys compare with plain ``=``
+          (per column, never struct equality) after the cast to the
+          read types, so a NULL key masks nothing. A positional delete
+          needs no sequence test: a data file path belongs to one
+          staged directory, hence one sequence, and a position delete
+          only names files older than itself. ``_metadata`` is
+          attached only when a delete or ``with_pos`` needs it."""
         v = snap["version"]
         ddl = snap.get("ddl", self.ddl)
         # tombstones stay materialized through assembly (equality
@@ -2960,22 +3132,20 @@ class LakeTable:
         target = self._ddl_fields(ddl)
         oldest = min(f["seq"] for f in files)
         live: set[str] = set()
-        pos_rows: list[DataFrame] = []
-        eq_rows: dict[tuple[str, ...], list[DataFrame]] = {}
-        eq_seqs: set[int] = set()
+        # delete sets as (path, sequence, keys) per file
+        pos_files: list[tuple[str, int, None]] = []
+        eq_files: dict[tuple[str, ...], list[tuple[str, int, tuple]]] = {}
         for d in snap["delete_files"]:
             dseq, meta = d["seq"], json.loads(d["entry"])
             live.add(meta["path"])
             if dseq <= oldest:
                 continue  # masks none of these entries
             if meta.get("pos"):
-                pos_rows.append(self._delete_rows(meta["path"], dseq, None))
+                pos_files.append((meta["path"], dseq, None))
                 continue
             trans, keys = self._eq_delete_keys(meta["cols"], dseq, v, ddl)
-            eq_rows.setdefault(trans, []).append(
-                self._delete_rows(meta["path"], dseq, keys)
-            )
-            eq_seqs.add(dseq)
+            eq_files.setdefault(trans, []).append((meta["path"], dseq, keys))
+        eq_seqs = {dseq for g in eq_files.values() for _, dseq, _ in g}
         if v >= self._delete_memo_v:
             # bounded by the delete files the newest snapshot read still
             # references; an older snapshot's files rebuild on demand
@@ -2987,7 +3157,7 @@ class LakeTable:
         def bucket(seq: int) -> int:
             return max((s for s in eq_seqs if s <= seq), default=0)
 
-        need_pos = with_pos or bool(pos_rows)
+        need_pos = with_pos or bool(pos_files)
 
         def project(
             raw: DataFrame, entry_ddl: str, seq_sql: str
@@ -3065,13 +3235,39 @@ class LakeTable:
             )
             parts.append(project(raw, entry_ddl, str(bucket(f["seq"]))))
         df = functools.reduce(DataFrame.unionByName, parts)
-        if pos_rows:
-            dels = functools.reduce(DataFrame.union, pos_rows)
-            df = df.join(F.broadcast(dels), on=["__f", "__p"], how="left_anti")
-        for trans, rows in eq_rows.items():
-            cond = _key_match(trans) + " AND __d > __s"
-            dels = functools.reduce(DataFrame.union, rows)
-            df = df.join(F.broadcast(dels), F.expr(cond), how="left_anti")
+        masks: list[str] = []  # in-scan deletes: true on a deleted row
+        joins: list[tuple[list, object]] = []  # (files, join condition)
+        if pos_files:
+            rows = self._inline(pos_files)
+            if rows is None:
+                joins.append((pos_files, ["__f", "__p"]))
+            else:
+                masks += _pos_masks(t for r in rows for t in r)
+        for trans, group in eq_files.items():
+            rows = self._inline(group)
+            if rows is None:
+                cond = F.expr(_key_match(trans) + " AND __d > __s")
+                joins.append((group, cond))
+                continue
+            types = [rt for _, _, rt in group[0][2]]
+            by_seq: dict[int, list[tuple]] = {}
+            for (_, dseq, _), r in zip(group, rows):
+                by_seq.setdefault(dseq, []).extend(r)
+            masks += [
+                _eq_mask(trans, types, dseq, tuples)
+                for dseq, tuples in by_seq.items()
+                if tuples
+            ]
+        if masks:
+            # plain '=' as in the join: a NULL data key leaves its
+            # disjunct NULL, and coalesce keeps the row
+            df = df.filter(f"NOT coalesce({' OR '.join(masks)}, false)")
+        for group, on in joins:
+            dels = functools.reduce(
+                DataFrame.union,
+                [self._delete_rows(p, dseq, keys) for p, dseq, keys in group],
+            )
+            df = df.join(F.broadcast(dels), on, how="left_anti")
         return df.selectExpr(*out_cols)
 
 

@@ -17,7 +17,6 @@ from bench import (
     PROBE_QUIET,
     STALL_RETRY,
     cells_over_anchor,
-    measured_seconds,
     measured_seconds_ex,
     should_rerun_sweep,
 )
@@ -39,14 +38,14 @@ def _seq(*values):
 
 def test_subsecond_cell_records_median_of_three():
     run = _seq(0.2, 0.9, 0.4)
-    assert measured_seconds(run) == 0.4
+    assert measured_seconds_ex(run)[0] == 0.4
     assert len(run.calls) == 3
 
 
 def test_midrange_cell_records_single_run():
     # between MEDIAN_CUTOFF and STALL_RETRY: one reading stands
     run = _seq(1.7)
-    assert measured_seconds(run) == 1.7
+    assert measured_seconds_ex(run)[0] == 1.7
     assert len(run.calls) == 1
 
 
@@ -54,21 +53,21 @@ def test_heavy_consistent_cell_stops_after_two():
     # a genuinely heavy cell reproduces within 30% — no third run,
     # and the MIN of the pair is recorded
     run = _seq(4.2, 4.0)
-    assert measured_seconds(run) == 4.0
+    assert measured_seconds_ex(run)[0] == 4.0
     assert len(run.calls) == 2
 
 
 def test_stall_then_normal_recovers_the_true_reading():
     # 25 s stall, then two honest readings: the min survives
     run = _seq(25.0, 3.1, 3.0)
-    assert measured_seconds(run) == 3.0
+    assert measured_seconds_ex(run)[0] == 3.0
     assert len(run.calls) == 3
 
 
 def test_retry_stops_once_reading_drops_below_threshold():
     # second reading under STALL_RETRY ends the loop immediately
     run = _seq(25.0, 2.0)
-    assert measured_seconds(run) == 2.0
+    assert measured_seconds_ex(run)[0] == 2.0
     assert len(run.calls) == 2
 
 
@@ -76,14 +75,14 @@ def test_two_consistent_stalls_stand_documented_limitation():
     # two same-magnitude stalls read as "consistent" and stand —
     # BASELINE.md's cross-run minimum rule covers this case
     run = _seq(25.0, 26.0)
-    assert measured_seconds(run) == 25.0
+    assert measured_seconds_ex(run)[0] == 25.0
     assert len(run.calls) == 2
 
 
 def test_no_retry_cell_keeps_first_reading():
     # cache-backed cells (c39): a rerun would time a cache hit
     run = _seq(30.0)
-    assert measured_seconds(run, retryable=False) == 30.0
+    assert measured_seconds_ex(run, retryable=False)[0] == 30.0
     assert len(run.calls) == 1
 
 
@@ -93,7 +92,7 @@ def test_no_retry_cell_skips_repeat_median_too():
     # rerun would time a cache-hit read of the (session, sf)-cached
     # build, exactly what NO_RETRY exists to prevent.
     run = _seq(0.4, 0.1, 0.1)
-    assert measured_seconds(run, retryable=False) == 0.4
+    assert measured_seconds_ex(run, retryable=False)[0] == 0.4
     assert len(run.calls) == 1
 
 
@@ -185,11 +184,11 @@ def test_summary_line_is_bounded_and_core_only():
     # it (r15's line, grown by cell_runs + guard, was cut from the
     # front and failed to parse). Build a worst-case line — every
     # headline cell plus its demo-build twin, probes, session init,
-    # maximal float widths — and bound it well under the capture
+    # maximal float widths — and bound it under the capture
     # window; the payload carries ONLY the five driver-parsed keys.
     import json
 
-    from bench import SPLIT_BUILD, summary_line
+    from bench import CAPTURE_WINDOW, SPLIT_BUILD, summary_line
 
     times = {"_session_init": 8888.888, "_host_probe_start": 10.463}
     for name in HEADLINE:
@@ -199,7 +198,8 @@ def test_summary_line_is_bounded_and_core_only():
     times["_host_probe_end"] = 10.486
     line = summary_line(123456.789, times, 0.1)
     assert "\n" not in line
-    assert len(line) < 8192
+    assert CAPTURE_WINDOW <= 8192
+    assert len(line) < CAPTURE_WINDOW
     payload = json.loads(line)
     assert set(payload) == {"metric", "value", "unit", "queries", "sf"}
     assert payload["value"] == 123456.789

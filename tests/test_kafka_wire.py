@@ -29,6 +29,20 @@ def test_crc32c_known_vector():
     assert crc32c(b"") == 0
 
 
+@pytest.mark.parametrize("n", [0, 1, 63, 64, 65, 1023, 1024, 16391, 250_007])
+def test_crc32c_lanes_match_the_byte_loop(n):
+    import random
+
+    from iceberg_playground_spark.kafkawire import _CRC32C_TABLE
+
+    data = random.Random(n).randbytes(n)
+    crc = 0xFFFFFFFF
+    for b in data:
+        crc = _CRC32C_TABLE[(crc ^ b) & 0xFF] ^ (crc >> 8)
+    assert crc32c(data) == crc ^ 0xFFFFFFFF
+    assert crc32c(bytearray(data)) == crc ^ 0xFFFFFFFF
+
+
 def test_varint_zigzag_identities():
     for n in [0, 1, -1, 63, -64, 64, 300, -301, 2**31, -(2**31), 2**62]:
         buf = encode_varint(n)
@@ -58,6 +72,14 @@ def test_corruption_is_detected():
     buf[-1] ^= 0xFF
     with pytest.raises(ValueError, match="CRC32C"):
         decode_record_batch(bytes(buf))
+    # a frame long enough for the lane path: a byte flipped mid-frame
+    big = bytearray(
+        encode_record_batch([(b"k%d" % i, b"v" * 100) for i in range(200)])
+    )
+    assert len(big) > 16384
+    big[len(big) // 2] ^= 0x01
+    with pytest.raises(ValueError, match="CRC32C"):
+        decode_record_batch(bytes(big))
     with pytest.raises(ValueError, match="magic"):
         bad = bytearray(encode_record_batch([(b"k", b"v")]))
         bad[16] = 1  # magic v1

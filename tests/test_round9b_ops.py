@@ -21,6 +21,20 @@ from tests.conftest import SF_CHECK  # noqa: E402
 # --- c54 quantized Lloyd ----------------------------------------------------
 
 
+def test_qdf_source_bytes_sums_a_directory_backed_table(tmp_path):
+    from iceberg_playground_spark.queries.round9b import _qdf_source_bytes
+
+    assert _qdf_source_bytes(str(tmp_path)) == 0  # missing: cache off
+    src = tmp_path / "embeddings.parquet"
+    src.write_bytes(b"x" * 10)
+    assert _qdf_source_bytes(str(tmp_path)) == 10  # a single file
+    src.unlink()
+    (src / "day=1").mkdir(parents=True)
+    (src / "part-0.parquet").write_bytes(b"x" * 300)
+    (src / "day=1" / "part-1.parquet").write_bytes(b"x" * 700)
+    assert _qdf_source_bytes(str(tmp_path)) == 1000  # not the inode
+
+
 def test_c54_all_vecs_assigned_valid_clusters(spark):
     df = registry.QUERIES["c54_kmeans_lloyd"](spark, SF_CHECK)
     rows = df.collect()

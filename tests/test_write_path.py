@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import contextlib
 import json
+import os
 
 import pytest
 
@@ -853,7 +854,9 @@ def test_position_delete_on_partitioned_table(catalog, spark):
     )
     t.append(spark.createDataFrame(ROWS, DDL))
     t.delete_where_positional("size = 'medium' AND count > 10")
-    rows = sorted((r["name"], r["size"]) for r in t.read().collect())
+    df = t.read()
+    assert _plan_shape(df)["anti_joins"] == 0  # the mask in the scan
+    rows = sorted((r["name"], r["size"]) for r in df.collect())
     assert ("B", "medium") not in rows          # count 15: deleted
     assert ("C", "medium") in rows              # count 10: kept
     assert len(rows) == 4
@@ -1096,22 +1099,35 @@ def test_changelog_launches_no_spark_job(catalog, spark):
 def test_delete_side_is_read_once_per_table_object(
     catalog, spark, monkeypatch
 ):
+    import pyarrow.parquet as pq
     from pyspark.sql.readwriter import DataFrameReader
 
-    t = _history(
-        catalog, spark, "memo", 4, {1: [("eq", 1)], 2: [("pos", 0)]}
-    )
-    t.read()
-    reads = []
-    parquet = DataFrameReader.parquet
+    _history(catalog, spark, "memo", 4, {1: [("eq", 1)], 2: [("pos", 0)]})
+    t = catalog.load_table("test_ns", "memo")  # nothing memoized yet
+    reads, driver = [], []
+    parquet, parquet_file = DataFrameReader.parquet, pq.ParquetFile
 
     def counting(self, *paths, **kw):
         reads.append(paths)
         return parquet(self, *paths, **kw)
 
+    def counting_file(path, *a, **kw):
+        driver.append(path)
+        return parquet_file(path, *a, **kw)
+
     monkeypatch.setattr(DataFrameReader, "parquet", counting)
-    got = sorted(r["name"] for r in t.read().collect())
+    monkeypatch.setattr(pq, "ParquetFile", counting_file)
+    t.read()
+    # both delete files are small: read on the driver, not by Spark
     assert len(reads) == 1  # the data scan only
+    assert {os.path.dirname(p) for p in driver} == {
+        json.loads(d["entry"])["path"]
+        for d in t.snapshot(t.current_version())["delete_files"]
+    }
+    reads.clear()
+    driver.clear()
+    got = sorted(r["name"] for r in t.read().collect())
+    assert len(reads) == 1 and driver == []  # memoized
     assert got == ["n2", "n3"]
     # a delete HEAD no longer references leaves the memo
     base = t.current_version()
@@ -1134,6 +1150,7 @@ def _plan_shape(df) -> dict:
             "FileScan" in ln and "size:string" in ln for ln in lines
         ),
         "scans": sum("FileScan" in ln for ln in lines),
+        "scan_masks": sum("Filter NOT coalesce(" in ln for ln in lines),
         "broadcasts": plan.count("BroadcastExchange"),
         "anti_joins": plan.count("LeftAnti"),
         "hash_exchanges": plan.count("Exchange hashpartitioning"),
@@ -1142,8 +1159,8 @@ def _plan_shape(df) -> dict:
 
 def test_plan_size_is_independent_of_entry_count(catalog, spark):
     # three deletes (eq, pos, eq) over 2 vs 6 unpartitioned entries:
-    # one data scan either way, one broadcast per delete kind, and no
-    # shuffle on either side
+    # one data scan either way, every (small) delete set inside its
+    # one filter, and no join or shuffle
     two = _history(
         catalog, spark, "shape2", 2,
         {1: [("eq", 1), ("pos", 0), ("eq", 0)]},
@@ -1154,8 +1171,9 @@ def test_plan_size_is_independent_of_entry_count(catalog, spark):
     )
     assert len(six.snapshot(six.current_version())["data_files"]) == 6
     s2, s6 = _plan_shape(two.read()), _plan_shape(six.read())
-    assert s6["data_scans"] == 1
-    assert s6["broadcasts"] == 2 and s6["anti_joins"] == 2
+    assert s6["data_scans"] == 1 and s6["scans"] == 1
+    assert s6["scan_masks"] == 1
+    assert s6["broadcasts"] == 0 and s6["anti_joins"] == 0
     assert s6["hash_exchanges"] == 0
     assert s2 == s6
     assert two.read().count() == 0
@@ -1175,6 +1193,7 @@ def test_equality_delete_on_widened_key_still_masks(catalog, spark):
     t.delete_where("k = 3", ["k"])  # ... and this one a bigint key
     df = t.read()
     assert dict(df.dtypes)["k"] == "bigint"
+    assert _plan_shape(df)["anti_joins"] == 0  # both masks in the scan
     assert sorted(tuple(r) for r in df.collect()) == [(1, "c"), (2, "b")]
 
 
@@ -1191,7 +1210,9 @@ def test_null_key_is_not_masked_by_a_null_delete_key(catalog, spark):
     # before the one-pass read)
     t = _table(catalog, spark, name="nullkey", rows=ROWS + [(None, "x", 1)])
     t.delete_where("name IS NULL OR name = 'A'", ["name"])
-    got = sorted(r["count"] for r in t.read().collect())
+    df = t.read()
+    assert _plan_shape(df)["anti_joins"] == 0  # the mask in the scan
+    got = sorted(r["count"] for r in df.collect())
     assert got == [1, 10, 15, 20, 20]
 
 
@@ -1243,3 +1264,155 @@ def test_staging_casts_a_narrower_type_up(catalog, spark):
     df = t.read()
     assert dict(df.dtypes) == {"id": "bigint", "k": "bigint"}
     assert sorted(tuple(r) for r in df.collect()) == [(2, 2), (3, 3)]
+
+
+# --- small delete sets apply inside the scan --------------------------------
+
+
+def test_small_delete_read_has_no_join_and_counts_in_two_jobs(
+    catalog, spark
+):
+    t = _history(
+        catalog, spark, "inscan", 4, {1: [("eq", 1)], 2: [("pos", 0)]}
+    )
+    df = t.read()
+    shape = _plan_shape(df)
+    assert shape["broadcasts"] == shape["anti_joins"] == 0
+    assert shape["hash_exchanges"] == 0
+    with _job_probe(spark, "inscan-count-jobs") as jobs:
+        assert df.count() == 2
+        # the scan's stage, with the deletes, and the count's final
+        # stage: no job builds a delete side
+        assert jobs() == 2
+
+
+def test_inline_multi_column_key_matches_per_column(catalog, spark):
+    t = catalog.create_table(
+        "test_ns", "mkey", "a INT, b STRING, d DATE, v INT"
+    )
+
+    def frame(rows):
+        return spark.createDataFrame(
+            rows, "a INT, b STRING, d STRING, v INT"
+        ).selectExpr("a", "b", "CAST(d AS DATE) AS d", "v")
+
+    t.append(
+        frame(
+            [
+                (1, "x", "2024-01-01", 1),
+                (1, "y", "2024-01-01", 2),  # b differs
+                (2, "x", "2024-01-01", 3),  # a differs
+                (None, "x", "2024-01-01", 4),  # NULL data key
+                (2, None, "2024-01-01", 5),  # NULL data key
+                (1, "x", "1969-12-31", 6),  # d differs
+                (3, "z", "1969-12-31", 7),  # a date before the epoch
+            ]
+        )
+    )
+    # keys (1,x,2024-01-01), (3,z,1969-12-31) and the NULL-holding
+    # (NULL,x,...) and (2,NULL,...), which mask nothing
+    t.delete_where("v IN (1, 4, 5, 7)", ["a", "b", "d"])
+    # re-appended after the delete: visible
+    t.append(frame([(1, "x", "2024-01-01", 8)]))
+    df = t.read()
+    assert _plan_shape(df)["anti_joins"] == 0
+    assert sorted(r["v"] for r in df.collect()) == [2, 3, 4, 5, 6, 8]
+
+
+def test_inline_string_keys_escape_quote_and_backslash(catalog, spark):
+    doomed = [
+        "it's", "back\\slash", "\\'", "a\\nb", "\\u0041", "\\101",
+        "''", "\\", "tab\there", "ünï",
+    ]
+    kept = ["A", "a\nb", "plain", "it", "s"]
+    ddl = "name STRING, n INT"
+    t = catalog.create_table("test_ns", "strkey", ddl)
+    t.append(
+        spark.createDataFrame(
+            [(x, i) for i, x in enumerate(doomed + kept)], ddl
+        )
+    )
+    t.delete_where(f"n < {len(doomed)}", ["name"])
+    df = t.read()
+    assert _plan_shape(df)["anti_joins"] == 0
+    assert sorted(r["name"] for r in df.collect()) == sorted(kept)
+    # a session that keeps backslashes raw cannot parse the escapes:
+    # the set falls back to the join, with the same answer
+    conf = "spark.sql.parser.escapedStringLiterals"
+    spark.conf.set(conf, "true")
+    try:
+        df = t.read()
+        assert _plan_shape(df)["anti_joins"] == 1
+        assert sorted(r["name"] for r in df.collect()) == sorted(kept)
+    finally:
+        spark.conf.unset(conf)
+
+
+def test_over_cap_or_inexact_delete_sets_keep_the_broadcast_anti_join(
+    catalog, spark
+):
+    from iceberg_playground_spark import tables
+
+    n = tables._INLINE_DELETE_MAX + 1
+    ddl = "id BIGINT, x DOUBLE, v STRING"
+    t = catalog.create_table("test_ns", "overcap", ddl)
+    t.append(
+        spark.range(2 * n + 6).selectExpr(
+            "id", "id / 2 AS x", "CAST(id AS STRING) AS v"
+        )
+    )
+    t.delete_where(f"id < {n}", ["id"])  # n keys: over the cap
+    t.delete_where_positional(f"id >= {n} AND id < {2 * n}")  # n rows
+    t.delete_where(f"id = {2 * n}", ["x"])  # 1 key, no exact literal
+    t.delete_where(f"id = {2 * n + 1}", ["v"])  # 1 key: in the scan
+    df = t.read()
+    shape = _plan_shape(df)
+    # one join per set that does not inline: id, positional, x
+    assert shape["anti_joins"] == shape["broadcasts"] == 3
+    assert shape["scan_masks"] == 1  # the small string set
+    assert sorted(r["id"] for r in df.collect()) == [
+        2 * n + 2, 2 * n + 3, 2 * n + 4, 2 * n + 5
+    ]
+
+
+def test_multi_column_key_over_its_cap_keeps_the_join(catalog, spark):
+    from iceberg_playground_spark import tables
+
+    n = tables._INLINE_TUPLE_MAX
+    ddl = "a BIGINT, b BIGINT"
+    t = catalog.create_table("test_ns", "mkcap", ddl)
+    t.append(spark.range(n + 3).selectExpr("id AS a", "id % 2 AS b"))
+    t.delete_where(f"a < {n}", ["a", "b"])  # at the cap: in the scan
+    assert _plan_shape(t.read())["anti_joins"] == 0
+    t.delete_where(f"a < {n + 1}", ["a", "b"])  # one more: the join
+    df = t.read()
+    assert _plan_shape(df)["anti_joins"] == 1
+    assert sorted(r["a"] for r in df.collect()) == [n + 1, n + 2]
+
+
+def test_sql_literal_is_exact(spark):
+    import datetime
+
+    from iceberg_playground_spark.tables import _sql_literal
+
+    cases = [
+        (-128, "tinyint"), (127, "tinyint"),
+        (-32768, "smallint"), (32767, "smallint"),
+        (-2**31, "int"), (2**31 - 1, "int"),
+        (-2**63, "bigint"), (2**63 - 1, "bigint"),
+        (True, "boolean"), (False, "boolean"),
+        (-719162, "date"), (0, "date"), (2932896, "date"),
+        ("it's \\ \\' \\n \\u0041 \\101 %_ ü", "string"), ("", "string"),
+    ]
+    df = spark.sql(
+        "SELECT "
+        + ", ".join(
+            f"{_sql_literal(v, t)} AS c{i}" for i, (v, t) in enumerate(cases)
+        )
+    )
+    assert [t for _, t in df.dtypes] == [t for _, t in cases]
+    epoch = datetime.date(1970, 1, 1)
+    assert list(df.collect()[0]) == [
+        epoch + datetime.timedelta(days=v) if t == "date" else v
+        for v, t in cases
+    ]
