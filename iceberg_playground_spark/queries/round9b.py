@@ -117,7 +117,7 @@ FROM a3 ORDER BY vec_id
 
 
 # Input-cache threshold for the shared quantized frame (bytes of the
-# source parquet; env-overridable like tables._BOUNDS_DRIVER_MAX).
+# source parquet).
 # Multi-pass TRAIN consumers (c54/c70/c74, inherited by c72/c77) pass
 # cache=True unconditionally — with the round-17 repartition the
 # checkpoint wins at every scale (the round-16 rejection measured a
@@ -126,13 +126,9 @@ FROM a3 ORDER BY vec_id
 # SINGLE-pass consumers keep the lazy scan until the source crosses
 # this byte threshold, past which even one consumer's re-derivation
 # risk (stage retry, speculative re-run) makes materialization the
-# safe default. Default 256 MB: every shipped SF stays below it
-# (sf0.1 embeddings = 0.8 MB), a deployment-scale corpus is far above.
-_QDF_CACHE_MIN_BYTES = int(
-    os.environ.get(
-        "SPARK_GRAFT_QDF_CACHE_MIN_BYTES", str(256 * 1024 * 1024)
-    )
-)
+# safe default. 256 MB: every shipped SF stays below it (sf0.1
+# embeddings = 0.8 MB), a deployment-scale corpus is far above.
+_QDF_CACHE_MIN_BYTES = 256 * 1024 * 1024
 
 
 def _qdf_source_bytes(sf: str) -> int:

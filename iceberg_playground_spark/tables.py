@@ -32,11 +32,13 @@ on plain parquet + an atomic JSON snapshot log:
   is exactly what the streaming sink (queries/streaming.py) uses per
   micro-batch epoch.
 
-Concurrency note (scale posture): optimistic commit via atomic rename —
-if the next version already exists the committer re-reads HEAD and
-retries, the same CAS loop Iceberg's catalog performs (and the conflict
-the reference dodges by having ONE committer; comment at
-decouple.rs:22-24).
+Concurrency note (scale posture): every snapshot writer commits through
+one optimistic loop, ``LakeTable._commit_plan``: it plans the next
+snapshot from HEAD and creates ``v<HEAD+1>.json`` atomically
+(``_atomic_create``); if another committer took that version first it
+re-reads HEAD and replans, the same CAS loop Iceberg's catalog performs
+(and the conflict the reference dodges by having ONE committer; comment
+at decouple.rs:22-24).
 """
 
 from __future__ import annotations
@@ -48,6 +50,8 @@ import re
 import shutil
 import time
 import uuid
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,11 +61,8 @@ _DATA_DIR = "data"
 
 # Commits at or below this many files read their parquet footers on
 # the driver (metadata-sized work, see _collect_bounds_many); larger
-# commits fan the footer reads out as one Spark job. Overridable for
-# deployments where even small commits should stay off the driver.
-_BOUNDS_DRIVER_MAX = int(
-    os.environ.get("SPARK_GRAFT_BOUNDS_DRIVER_MAX", "64")
-)
+# commits fan the footer reads out as one Spark job.
+_BOUNDS_DRIVER_MAX = 64
 _DELETE_DIR = "deletes"
 
 # The schema of a positional delete file: (data file URI, row index)
@@ -257,6 +258,41 @@ class CommitConflict(RuntimeError):
     """Another committer won the optimistic rename race."""
 
 
+def _atomic_create(path: str, text: str) -> bool:
+    """Create ``path`` holding ``text`` atomically, or return False,
+    leaving it as it was, when ``path`` already exists. The text goes
+    to a temp file first, which is hard-linked to ``path``: the link
+    is atomic on POSIX and fails on an existing target, so a reader
+    never sees a partial file and of two racing creators exactly one
+    wins."""
+    tmp = f"{path}.tmp.{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        f.write(text)
+    try:
+        os.link(tmp, path)
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+    return True
+
+
+# How many attempts _commit_plan makes before raising CommitConflict.
+_COMMIT_ATTEMPTS = 5
+
+
+class _Plan(NamedTuple):
+    """One attempt's snapshot content, planned from the HEAD it
+    extends (see ``LakeTable._commit_plan``)."""
+
+    data_files: list[dict]
+    delete_files: list[dict]
+    summary: dict
+    ddl: str
+    # a directory this attempt wrote that is garbage if it loses
+    written: str | None = None
+
+
 class LakeCatalog:
     """Filesystem-backed catalog: warehouse/<namespace>/<table>/…"""
 
@@ -344,8 +380,6 @@ class LakeCatalog:
         return t
 
     def drop_table(self, ns: str, name: str) -> None:
-        import shutil
-
         root = self.table_path(ns, name)
         if os.path.isdir(root):
             shutil.rmtree(root)
@@ -378,12 +412,12 @@ class LakeTable:
         self._delete_memo_v = -1
 
     # -- named refs (Iceberg tags) ------------------------------------------
-    # One FILE PER TAG under refs/, created with the same os.link CAS
-    # the snapshot log uses (_commit): creation is atomic, and tag
-    # immutability is enforced by the filesystem itself (a second
-    # create of the same name hits FileExistsError), so two racing
-    # create_tag calls can never silently lose one — the failure mode
-    # of the old single-refs.json read-modify-write.
+    # One FILE PER TAG under refs/, created by _atomic_create as the
+    # snapshot log is: creation is atomic, and tag immutability is
+    # enforced by the filesystem itself (a second create of the same
+    # name fails), so two racing create_tag calls can never silently
+    # lose one — the failure mode of the old single-refs.json
+    # read-modify-write.
     _TAG_NAME_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,127}$")
 
     def _refs_dir(self) -> str:
@@ -418,27 +452,20 @@ class LakeTable:
         immutable (re-tagging an existing name is an error, like
         Iceberg's CREATE TAG) and PIN their snapshot against
         expire_snapshots — the retention rule that makes audit/repro
-        refs safe to rely on. Atomic via os.link CAS (one file per tag,
-        the _commit pattern); after linking, the snapshot's continued
-        existence is re-verified so a create racing expire_snapshots
-        rolls back with an error instead of leaving a dangling ref
-        (expire re-reads tags just before unlinking snapshots, so the
-        two checks close on each other; see expire_snapshots)."""
+        refs safe to rely on. Atomic via _atomic_create (one file per
+        tag); after creating it, the snapshot's continued existence is
+        re-verified so a create racing expire_snapshots rolls back
+        with an error instead of leaving a dangling ref (expire
+        re-reads tags just before unlinking snapshots, so the two
+        checks close on each other; see expire_snapshots)."""
         v = self.current_version() if version is None else version
         target = self._ref_file(name)
         if v not in self.versions():
             raise ValueError(f"cannot tag uncommitted version v{v}")
-        tmp = target + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump({"version": v}, f)
-        try:
-            os.link(tmp, target)
-        except FileExistsError:
+        if not _atomic_create(target, json.dumps({"version": v})):
             raise ValueError(
                 f"tag exists: {name} -> v{self.tags().get(name)}"
-            ) from None
-        finally:
-            os.unlink(tmp)
+            )
         if v not in self.versions():  # expire won the race: roll back
             os.unlink(target)
             raise ValueError(f"version v{v} expired while tagging")
@@ -541,9 +568,9 @@ class LakeTable:
         """Append to the branch lineage: files stage exactly like a
         main append (parallel parquet write), but the commit is a
         branch-local entry — main's snapshot log and HEAD are
-        untouched. Entry ordering uses the same os.link CAS as
-        _commit, so concurrent branch writers serialize. Returns the
-        entry index."""
+        untouched. Entry ordering uses the same atomic create as the
+        snapshot log, so concurrent branch writers serialize. Returns
+        the entry index."""
         d = self._branch_dir(name)
         if not os.path.isdir(d):
             raise ValueError(f"no such branch: {name}")
@@ -554,17 +581,9 @@ class LakeTable:
                 [f for f in os.listdir(d)
                  if f.startswith("e") and f.endswith(".json")]
             )
-            target = os.path.join(d, f"e{n:06d}.json")
-            tmp = target + f".tmp.{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                f.write(body)
-            try:
-                os.link(tmp, target)
+            if _atomic_create(os.path.join(d, f"e{n:06d}.json"), body):
                 return n
-            except FileExistsError:
-                continue  # lost the slot race; renumber and retry
-            finally:
-                os.unlink(tmp)
+            # lost the slot race; renumber and retry
         raise CommitConflict(f"branch append lost 50 races in {d}")
 
     def read_branch(self, name: str) -> DataFrame:
@@ -621,8 +640,6 @@ class LakeTable:
         expire_snapshots' orphan grace reclaims them later (never
         immediately — the same staged-but-uncommitted protection the
         BatchedCommitter relies on)."""
-        import shutil
-
         d = self._branch_dir(name)
         if not os.path.isdir(d):
             raise KeyError(name)
@@ -656,13 +673,14 @@ class LakeTable:
         data_files: list[str],
         delete_files: list[str],
         summary: dict,
-        retries: int = 5,
         replace: bool = False,
         base: int | None = None,
         ddl: str | None = None,
     ) -> int:
-        """Optimistic snapshot commit: write-temp + atomic rename; on a
-        version collision, re-read HEAD and retry (Iceberg-style CAS).
+        """Commit staged data dirs and delete-file entries as the next
+        snapshot through ``_commit_plan``, the one loop every snapshot
+        writer goes through: on a version collision the files are
+        re-stamped onto the new HEAD.
         ``replace=True`` commits the given file set INSTEAD of extending
         the parent's (rewrite/compaction semantics). A replace MUST pass
         ``base`` = the version its rewritten file set was read from: an
@@ -675,25 +693,15 @@ class LakeTable:
         ``ddl`` stamps the snapshot with a schema other than the current
         one (schema-evolution commits pass the NEW ddl; table metadata on
         disk is only updated after the commit lands)."""
+        if replace and base is None:
+            raise ValueError("replace commit requires base version")
         entry_ddl = self.ddl if ddl is None else ddl
         # Bounds are a property of the staged files, not of the snapshot
         # version — compute ONCE, outside the CAS retry loop, in one
         # distributed job over every staged dir of this commit.
         bounds_by_dir, rows_by_dir = self._collect_bounds_many(data_files)
-        for _ in range(retries):
-            head = self.current_version()
-            if replace and base is None:
-                raise ValueError("replace commit requires base version")
-            # A commit pinned to ``base`` must land exactly on it: a
-            # replace replayed on a newer HEAD would erase concurrent
-            # data, and a fast-forward would silently merge divergent
-            # histories. Both surface as CommitConflict instead.
-            if base is not None and head != base:
-                raise CommitConflict(
-                    f"commit read v{base} but HEAD is now v{head} in "
-                    f"{self.root}: concurrent commit; re-read and retry"
-                )
-            snap = self.snapshot(head)
+
+        def plan(head: int, snap: dict) -> _Plan:
             # Every file entry carries the sequence (= version) that
             # committed it: the read path scopes equality deletes to
             # strictly-older data files, Iceberg's sequence-number rule
@@ -719,37 +727,54 @@ class LakeTable:
                 for p in data_files
             ]
             new_dels = [{"entry": d, "seq": seq} for d in delete_files]
+            if not replace:
+                new_data = snap["data_files"] + new_data
+                new_dels = snap["delete_files"] + new_dels
+            return _Plan(new_data, new_dels, summary, entry_ddl)
+
+        return self._commit_plan(plan, base)
+
+    def _commit_plan(
+        self,
+        plan: Callable[[int, dict], _Plan],
+        base: int | None = None,
+    ) -> int:
+        """The one snapshot-commit loop every writer goes through:
+        ``plan(head, snapshot(head))`` gives the content of snapshot
+        ``head + 1``, which is stamped and created atomically; if
+        another committer took that version first, HEAD is re-read and
+        the plan re-run on it (Iceberg-style CAS), up to
+        ``_COMMIT_ATTEMPTS`` times, and a losing attempt's ``written``
+        directory is removed. Returns the committed version.
+
+        A commit pinned to ``base`` must land exactly on it: a replace
+        replayed on a newer HEAD would erase concurrent data, and a
+        fast-forward would silently merge divergent histories. Both
+        surface as CommitConflict instead."""
+        for _ in range(_COMMIT_ATTEMPTS):
+            head = self.current_version()
+            if base is not None and head != base:
+                raise CommitConflict(
+                    f"commit read v{base} but HEAD is now v{head} in "
+                    f"{self.root}: concurrent commit; re-read and retry"
+                )
+            new = plan(head, self.snapshot(head))
             entry = {
-                "version": seq,
+                "version": head + 1,
                 "parent": head,
                 "ts": time.time(),  # commit wall time (AS OF TIMESTAMP)
-                "ddl": entry_ddl,  # the schema this snapshot serves
-                "data_files": (
-                    new_data if replace else snap["data_files"] + new_data
-                ),
-                "delete_files": (
-                    new_dels
-                    if replace
-                    else snap["delete_files"] + new_dels
-                ),
-                "summary": summary,
+                "ddl": new.ddl,  # the schema this snapshot serves
+                "data_files": new.data_files,
+                "delete_files": new.delete_files,
+                "summary": new.summary,
             }
-            tmp = self._snap_file(head + 1) + f".tmp.{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(entry, f)
-            target = self._snap_file(head + 1)
-            if os.path.exists(target):  # lost the race before rename
-                os.unlink(tmp)
-                continue
-            try:
-                # atomic on POSIX; fails/overwrites are the conflict signal
-                os.link(tmp, target)
-                os.unlink(tmp)
-            except FileExistsError:
-                os.unlink(tmp)
-                continue
-            return head + 1
-        raise CommitConflict(f"commit lost {retries} races in {self.root}")
+            if _atomic_create(self._snap_file(head + 1), json.dumps(entry)):
+                return head + 1
+            if new.written is not None:
+                shutil.rmtree(new.written, ignore_errors=True)
+        raise CommitConflict(
+            f"commit lost {_COMMIT_ATTEMPTS} races in {self.root}"
+        )
 
     # -- write path ----------------------------------------------------------
     def stage_append(self, df: DataFrame) -> str:
@@ -968,19 +993,30 @@ class LakeTable:
         an equality-delete parquet keyed by field id — deletes.rs:65-75;
         same contract, minus its name/size column mixup which Spark's
         column resolution makes impossible.)"""
-        keys = (
-            self.read()
-            .filter(predicate)
-            .select(*equality_cols)
-            .distinct()
-        )
-        d = os.path.join(self.root, _DELETE_DIR, uuid.uuid4().hex)
-        keys.write.mode("overwrite").parquet(d)
         return self._commit(
             [],
-            [json.dumps({"path": d, "cols": equality_cols})],
+            [
+                self._write_delete_keys(
+                    self.read().filter(predicate), equality_cols
+                )
+            ],
             {"operation": "delete", "predicate": predicate},
         )
+
+    def _write_delete_keys(
+        self, rows: DataFrame, equality_cols: list[str]
+    ) -> str:
+        """Write the distinct ``equality_cols`` tuples of ``rows`` as an
+        equality-delete file and return its delete-file entry. Key
+        names resolve to the table's spelling case-blind, as Spark
+        resolves them (the read path looks keys up by the table's
+        names); a name the table lacks is left for Spark to refuse."""
+        declared = {n.lower(): n for n, _ in self._visible_fields(self.ddl)}
+        cols = [declared.get(c.lower(), c) for c in equality_cols]
+        d = os.path.join(self.root, _DELETE_DIR, uuid.uuid4().hex)
+        keys = rows.select(*(F.col(c).alias(c) for c in cols)).distinct()
+        keys.write.mode("overwrite").parquet(d)
+        return json.dumps({"path": d, "cols": cols})
 
     def delete_where_positional(self, predicate: str) -> int:
         """A5': POSITION delete, merge-on-read — Iceberg's second
@@ -1084,9 +1120,8 @@ class LakeTable:
         residual scan opens ONLY the boundary files. The CAS loop
         replans from HEAD on every retry, so a racing append's new
         files are never silently dropped."""
-        for _ in range(5):
-            head = self.current_version()
-            snap = self.snapshot(head)
+
+        def plan(head: int, snap: dict) -> _Plan:
             new_files: list[dict] = []
             dropped = 0
             partial: list[dict] = []  # entries restricted to boundary files
@@ -1175,39 +1210,19 @@ class LakeTable:
                 "files_partial": n_partial,
                 "metadata_only": n_partial == 0,
             }
-            entry = {
-                "version": head + 1,
-                "parent": head,
-                "ts": time.time(),
-                "ddl": snap.get("ddl", self.ddl),
-                "data_files": new_files,
-                "delete_files": new_dels,
-                "summary": summary,
-            }
-            tmp = self._snap_file(head + 1) + f".tmp.{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                json.dump(entry, fh)
-            target = self._snap_file(head + 1)
+            # a lost attempt's residual delete dir is reclaimed at once
+            # (not left for the orphan grace); the next attempt replans
+            # the boundary files from the new HEAD
+            return _Plan(
+                new_files,
+                new_dels,
+                summary,
+                snap.get("ddl", self.ddl),
+                written=delete_dir,
+            )
 
-            def _lost_race() -> None:
-                # reclaim the now-stale residual delete dir immediately
-                # instead of leaving it for the orphan-grace sweep; the
-                # next iteration replans boundary files from the new HEAD
-                os.unlink(tmp)
-                if delete_dir is not None:
-                    shutil.rmtree(delete_dir, ignore_errors=True)
-
-            if os.path.exists(target):
-                _lost_race()
-                continue
-            try:
-                os.link(tmp, target)
-                os.unlink(tmp)
-            except FileExistsError:
-                _lost_race()
-                continue
-            return head + 1, summary
-        raise CommitConflict(f"delete_range lost 5 races in {self.root}")
+        v = self._commit_plan(plan)
+        return v, self.snapshot(v)["summary"]
 
     def add_column(self, name: str, dtype: str) -> int:
         """Schema evolution: append a nullable column (Iceberg
@@ -1453,16 +1468,7 @@ class LakeTable:
         makes it correct by construction: the delete (seq N) masks only
         data files with seq < N, so existing rows with matching keys
         vanish while the rows appended at seq N are untouched."""
-        df = self._conform(df)  # the delete keys too
-        staged = self.stage_append(df)
-        keys = df.select(*equality_cols).distinct()
-        d = os.path.join(self.root, _DELETE_DIR, uuid.uuid4().hex)
-        keys.write.mode("overwrite").parquet(d)
-        return self._commit(
-            [staged],
-            [json.dumps({"path": d, "cols": equality_cols})],
-            {"operation": "upsert"},
-        )
+        return self.merge(df, equality_cols)
 
     def merge(
         self,
@@ -1479,24 +1485,22 @@ class LakeTable:
         rule keeps it atomic and self-consistent: the delete (seq N)
         masks only files with seq < N, never the rows this same
         transaction appends."""
-        if delete_col is None:
-            return self.upsert(df, equality_cols)
-        # NULL flag = NOT a delete (a WHEN MATCHED AND <cond> clause
-        # whose condition is NULL does not fire) — without the
-        # coalesce, ~NULL would silently drop the row from the append
-        # while its key still masked, i.e. an accidental delete.
         df = self._conform(df)  # the delete keys too
-        keep = df.filter(
-            ~F.coalesce(F.col(delete_col), F.lit(False))
-        ).drop(delete_col)
+        keep = df
+        if delete_col is not None:
+            # NULL flag = NOT a delete (a WHEN MATCHED AND <cond> clause
+            # whose condition is NULL does not fire) — without the
+            # coalesce, ~NULL would silently drop the row from the
+            # append while its key still masked, i.e. an accidental
+            # delete.
+            keep = df.filter(
+                ~F.coalesce(F.col(delete_col), F.lit(False))
+            ).drop(delete_col)
         staged = self.stage_append(keep)
-        keys = df.select(*equality_cols).distinct()
-        d = os.path.join(self.root, _DELETE_DIR, uuid.uuid4().hex)
-        keys.write.mode("overwrite").parquet(d)
         return self._commit(
             [staged],
-            [json.dumps({"path": d, "cols": equality_cols})],
-            {"operation": "merge"},
+            [self._write_delete_keys(df, equality_cols)],
+            {"operation": "upsert" if delete_col is None else "merge"},
         )
 
     def replace_as(self, df: DataFrame) -> int:
@@ -1547,42 +1551,24 @@ class LakeTable:
         the MoR masking structure) replays exactly while history stays
         append-only: the bad snapshots remain time-travelable for the
         post-incident audit, and the rollback itself can be rolled
-        back. Pure metadata: zero data files are read or written; the
-        CAS loop is the _commit pattern (a concurrent commit wins the
-        version slot and the rollback retries on the new HEAD — a
-        rollback targets a VERSION, which a concurrent append does not
-        change)."""
+        back. Pure metadata: zero data files are read or written. A
+        concurrent commit that wins the version slot makes the rollback
+        land on the new HEAD instead: a rollback targets a VERSION,
+        which a concurrent append does not change."""
         old = self.snapshot(version)  # raises if expired/unknown
         old_ddl = old.get("ddl", self.ddl)
-        for _ in range(5):
-            head = self.current_version()
-            entry = {
-                "version": head + 1,
-                "parent": head,
-                "ts": time.time(),
-                "ddl": old_ddl,
-                "data_files": old["data_files"],
-                "delete_files": old["delete_files"],
-                "summary": {"operation": "rollback", "to": version},
-            }
-            tmp = self._snap_file(head + 1) + f".tmp.{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(entry, f)
-            target = self._snap_file(head + 1)
-            if os.path.exists(target):
-                os.unlink(tmp)
-                continue
-            try:
-                os.link(tmp, target)
-                os.unlink(tmp)
-            except FileExistsError:
-                os.unlink(tmp)
-                continue
-            if old_ddl != self.ddl:  # schema rolls back too
-                self.ddl = old_ddl
-                self._write_meta()
-            return head + 1
-        raise CommitConflict(f"rollback lost 5 races in {self.root}")
+        v = self._commit_plan(
+            lambda *_: _Plan(
+                old["data_files"],
+                old["delete_files"],
+                {"operation": "rollback", "to": version},
+                old_ddl,
+            )
+        )
+        if old_ddl != self.ddl:  # schema rolls back too
+            self.ddl = old_ddl
+            self._write_meta()
+        return v
 
     def cherrypick_snapshot(self, version: int) -> int:
         """Iceberg's ``cherrypick_snapshot``: re-apply ONE snapshot's
@@ -1732,33 +1718,19 @@ class LakeTable:
             merged.append(entry)
         if n_in == 0:
             return head  # nothing to consolidate: no version minted
-        new = {
-            "version": head + 1,
-            "parent": head,
-            "ts": time.time(),
-            "ddl": snap.get("ddl", self.ddl),
-            "data_files": merged + passthrough,
-            "delete_files": [dict(d) for d in snap["delete_files"]],
-            "summary": {
+        new = _Plan(
+            merged + passthrough,
+            snap["delete_files"],
+            {
                 "operation": "rewrite-manifests",
                 "merged_from": n_in,
                 "merged_to": n_out,
             },
-        }
-        tmp = self._snap_file(head + 1) + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(new, f)
-        target = self._snap_file(head + 1)
-        try:
-            os.link(tmp, target)
-            os.unlink(tmp)
-        except FileExistsError:
-            os.unlink(tmp)
-            raise CommitConflict(
-                f"rewrite_manifests read v{head} but v{head + 1} landed "
-                f"concurrently in {self.root}: re-read and retry"
-            )
-        return head + 1
+            snap.get("ddl", self.ddl),
+        )
+        # pinned to the HEAD it read: replaying on a newer one would
+        # drop that commit's files
+        return self._commit_plan(lambda *_: new, base=head)
 
     def _zvalue(self, df: DataFrame, cols: list[str], bits: int = 16):
         """Z-order key: min-max normalize each column to a ``bits``-wide
@@ -2196,13 +2168,10 @@ class LakeTable:
         delete files themselves (KB-scale parquet of (file, pos)
         pairs — Iceberg's position_deletes table likewise scans
         delete files; they are metadata-adjacent, never data)."""
-        import json as _json
-
         v = self.current_version() if version is None else version
-        data_root = os.path.join(self.root, _DATA_DIR)
         frames = []
         for d in self.snapshot(v)["delete_files"]:
-            e = _json.loads(d["entry"])
+            e = json.loads(d["entry"])
             if not e.get("pos"):
                 continue
             seq = int(d["seq"])
@@ -2229,7 +2198,6 @@ class LakeTable:
         # normalize the masked file to its data-root-relative identity
         # (scan paths may carry a file: scheme; split on the table's
         # data-dir component instead of prefix arithmetic)
-        del data_root
         return out.withColumn(
             "data_file",
             F.expr(f"substring_index(data_file, '/{_DATA_DIR}/', -1)"),
@@ -2452,8 +2420,6 @@ class LakeTable:
                     continue
                 if p not in dead and os.path.getmtime(p) > cutoff:
                     continue  # untracked + recent: possibly staged
-                import shutil
-
                 shutil.rmtree(p, ignore_errors=True)
                 removed += 1
         return {"expired_versions": expired, "removed_dirs": removed}
@@ -2626,48 +2592,33 @@ class LakeTable:
             # lone entry, nothing dangling: refuse without minting
             # (two KB-scale counts — the delete set, not the data)
             return head
-        merged = pruned
-        d = os.path.join(self.root, _DELETE_DIR, uuid.uuid4().hex)
-        merged.coalesce(1).write.mode("overwrite").parquet(d)
         keep_dels = [
-            dict(x)
+            x
             for x in snap["delete_files"]
             if not json.loads(x["entry"]).get("pos")
         ]
-        keep_dels.append(
-            {
+
+        def plan(*_) -> _Plan:
+            d = os.path.join(self.root, _DELETE_DIR, uuid.uuid4().hex)
+            pruned.coalesce(1).write.mode("overwrite").parquet(d)
+            merged_entry = {
                 "entry": json.dumps({"path": d, "pos": True}),
-                "seq": max(s for s, _ in pos_entries),
+                "seq": max(seq for seq, _ in pos_entries),
             }
-        )
-        new = {
-            "version": head + 1,
-            "parent": head,
-            "ts": time.time(),
-            "ddl": snap.get("ddl", self.ddl),
-            "data_files": [dict(f) for f in snap["data_files"]],
-            "delete_files": keep_dels,
-            "summary": {
-                "operation": "rewrite-position-deletes",
-                "merged_from": len(pos_entries),
-                "merged_to": 1,
-            },
-        }
-        tmp = self._snap_file(head + 1) + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(new, f)
-        target = self._snap_file(head + 1)
-        try:
-            os.link(tmp, target)
-            os.unlink(tmp)
-        except FileExistsError:
-            os.unlink(tmp)
-            raise CommitConflict(
-                f"rewrite_position_delete_files read v{head} but "
-                f"v{head + 1} landed concurrently in {self.root}: "
-                f"re-read and retry"
+            return _Plan(
+                snap["data_files"],
+                keep_dels + [merged_entry],
+                {
+                    "operation": "rewrite-position-deletes",
+                    "merged_from": len(pos_entries),
+                    "merged_to": 1,
+                },
+                snap.get("ddl", self.ddl),
+                written=d,  # a lost attempt removes its merged file
             )
-        return head + 1
+
+        # pinned to the HEAD it read, as rewrite_manifests
+        return self._commit_plan(plan, base=head)
 
     def read_incremental(self, from_version: int, to_version: int) -> DataFrame:
         """Incremental scan: rows APPENDED after `from_version` up to

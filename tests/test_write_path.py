@@ -1416,3 +1416,141 @@ def test_sql_literal_is_exact(spark):
         epoch + datetime.timedelta(days=v) if t == "date" else v
         for v, t in cases
     ]
+
+
+# --- one snapshot-commit path -----------------------------------------------
+
+
+@pytest.mark.parametrize("verb", ["delete_where", "upsert", "merge"])
+def test_equality_keys_resolve_to_the_table_spelling(catalog, spark, verb):
+    # Spark resolves column names case-blind, so a key spelled "NAME"
+    # on a column "name" is legal; the delete file must record the
+    # table's spelling, or every later read fails looking it up
+    from pyspark.errors import AnalysisException
+
+    t = _table(catalog, spark, name=f"case_{verb}")  # v1
+    kept = [r for r in ROWS if r[0] != "B"]
+    if verb == "delete_where":
+        t.delete_where("name = 'B'", ["NAME"])
+        want = kept
+    elif verb == "upsert":
+        t.upsert(spark.createDataFrame([("B", "tiny", 1)], DDL), ["NAME"])
+        want = kept + [("B", "tiny", 1)]
+    else:
+        src = spark.createDataFrame(
+            [("B", "tiny", 1, True), ("Z", "tiny", 2, False)],
+            DDL + ", gone BOOLEAN",
+        )
+        t.merge(src, ["NAME"], delete_col="gone")
+        want = kept + [("Z", "tiny", 2)]
+    assert sorted(tuple(r) for r in t.read().collect()) == sorted(want)
+    entry = json.loads(t.snapshot(2)["delete_files"][0]["entry"])
+    assert entry["cols"] == ["name"]
+    with pytest.raises(AnalysisException):  # an unknown key still fails
+        t.delete_where("name = 'A'", ["nope"])
+    assert t.current_version() == 2
+
+
+def _writer_table(catalog, spark):
+    """v4 with work for every snapshot writer: one data file whose
+    ``count`` bounds [2, 20] a delete_range of [12, 16] overlaps
+    partially, one two-dir commit for rewrite_manifests to merge, and
+    two positional deletes for rewrite_position_delete_files."""
+    t = catalog.create_table("test_ns", "writers", DDL, drop_if_exists=True)
+    t.append(spark.createDataFrame(ROWS, DDL).coalesce(1))
+    t._commit(
+        [
+            t.stage_append(spark.createDataFrame([(n, "x", 30)], DDL))
+            for n in ("F", "G")
+        ],
+        [],
+        {"operation": "append", "added": 2},
+    )
+    t.delete_where_positional("name = 'F'")
+    t.delete_where_positional("name = 'G'")
+    return t
+
+
+_SNAPSHOT_WRITERS = {
+    "append": lambda t, spark: t.append(
+        spark.createDataFrame([("H", "x", 1)], DDL)
+    ),
+    "delete_where": lambda t, spark: t.delete_where("name = 'A'", ["name"]),
+    "delete_range": lambda t, spark: t.delete_range("count", 12, 16),
+    "rollback": lambda t, spark: t.rollback(1),
+    "rewrite_manifests": lambda t, spark: t.rewrite_manifests(),
+    "rewrite_position_delete_files": (
+        lambda t, spark: t.rewrite_position_delete_files()
+    ),
+    "add_column": lambda t, spark: t.add_column("origin", "STRING"),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_SNAPSHOT_WRITERS))
+def test_a_writer_that_loses_every_race_leaves_no_trace(
+    catalog, spark, monkeypatch, writer
+):
+    from iceberg_playground_spark.tables import CommitConflict
+
+    t = _writer_table(catalog, spark)
+    head = t.current_version()
+    snaps = os.path.join(t.root, "snapshots")
+    deletes = os.path.join(t.root, "deletes")
+    deletes_before = sorted(os.listdir(deletes))
+    real_link = os.link
+
+    def lose(src, dst, *a, **kw):
+        if os.sep + "snapshots" + os.sep in dst:
+            raise FileExistsError(dst)  # another committer got there
+        return real_link(src, dst, *a, **kw)
+
+    monkeypatch.setattr("os.link", lose)
+    with pytest.raises(CommitConflict):
+        _SNAPSHOT_WRITERS[writer](t, spark)
+    monkeypatch.undo()
+    assert t.current_version() == head
+    assert not [f for f in os.listdir(snaps) if ".tmp." in f]
+    if writer in ("delete_range", "rewrite_position_delete_files"):
+        # the delete file each losing attempt wrote is gone
+        assert sorted(os.listdir(deletes)) == deletes_before
+    _SNAPSHOT_WRITERS[writer](t, spark)  # uncontended, it lands
+    assert t.current_version() == head + 1
+    snap = t.snapshot(head + 1)  # the format every writer shares
+    assert list(snap) == [
+        "version", "parent", "ts", "ddl",
+        "data_files", "delete_files", "summary",
+    ]
+    assert (snap["version"], snap["parent"]) == (head + 1, head)
+    assert all(isinstance(d["entry"], str) for d in snap["delete_files"])
+
+
+def test_rewrite_manifests_conflicts_instead_of_replaying(
+    catalog, spark, monkeypatch
+):
+    # a commit landing between rewrite_manifests reading HEAD and
+    # publishing: replaying the rewrite on the new HEAD would drop
+    # that commit's files, so the rewrite must fail instead
+    from iceberg_playground_spark.tables import CommitConflict
+
+    t = _writer_table(catalog, spark)
+    head = t.current_version()
+    rival = catalog.load_table("test_ns", "writers")
+    real_link = os.link
+    raced = []
+
+    def race(src, dst, *a, **kw):
+        if not raced and os.sep + "snapshots" + os.sep in dst:
+            raced.append(dst)
+            rival.append(spark.createDataFrame([("R", "x", 1)], DDL))
+        return real_link(src, dst, *a, **kw)
+
+    monkeypatch.setattr("os.link", race)
+    with pytest.raises(CommitConflict, match="concurrent commit"):
+        t.rewrite_manifests()
+    monkeypatch.undo()
+    assert t.current_version() == head + 1
+    assert t.snapshot(head + 1)["summary"]["operation"] == "append"
+    before = sorted(tuple(r) for r in t.read().collect())
+    assert ("R", "x", 1) in before
+    assert t.rewrite_manifests() == head + 2  # re-read and retry
+    assert sorted(tuple(r) for r in t.read().collect()) == before
